@@ -111,31 +111,48 @@ def cast_envelope(
     pkg/logical/decoder.go keeps them as strings until the relation's
     column types are applied). This projection applies a table's
     registered payload StructType: each map value is looked up by field
-    name and CAST to the field's Spark type, nulls and absent keys
-    flowing through as NULL. Pure column expressions — the cast runs in
-    whole-stage codegen, no Python.
+    name and parsed as the field's Spark type, nulls and absent keys
+    flowing through as NULL. Scalars are CAST from their text; a
+    ``BinaryType`` value is pgoutput's hex text (``\\x0102ff``), decoded
+    by dropping the ``\\x`` and unhexing the rest; an ``ArrayType``
+    value is a JSON list of element texts (the source's rendering of a
+    Postgres array, NULL elements as ``null``), parsed with
+    ``from_json`` and each element decoded by its own type's rule.
+    Pure column expressions — the cast runs in whole-stage codegen, no
+    Python.
 
     ``strict=True`` (default) is fail-stop under ANSI mode: a datum the
     declared type cannot parse kills the batch — the reference's
     posture (a decode error fails the subscription rather than
-    corrupting the sink). ``strict=False`` swaps in ``try_cast`` so
-    malformed values land as NULL and the stream survives — choose it
-    only with a downstream quarantine/audit on NULLs that the source
-    said were non-null.
+    corrupting the sink). ``strict=False`` swaps in the ``try_``
+    variants so malformed values land as NULL and the stream survives —
+    choose it only with a downstream quarantine/audit on NULLs that the
+    source said were non-null.
     """
+
+    def parse(c: Column, t: T.DataType) -> Column:
+        if isinstance(t, T.BinaryType):
+            hexed = F.substr(c, F.lit(3))
+            return (
+                F.to_binary(hexed, F.lit("hex"))
+                if strict
+                else F.try_to_binary(hexed, F.lit("hex"))
+            )
+        if isinstance(t, T.ArrayType):
+            texts = F.from_json(
+                c, T.ArrayType(T.StringType()),
+                {"mode": "FAILFAST" if strict else "PERMISSIVE"},
+            )
+            return F.transform(texts, lambda x: parse(x, t.elementType))
+        return c.cast(t) if strict else c.try_cast(t)
 
     def img(col: str) -> Column:
         m = F.col(col)
-        cast = (
-            (lambda c, t: c.cast(t))
-            if strict
-            else (lambda c, t: c.try_cast(t))
-        )
         return F.when(
             m.isNotNull(),
             F.struct(
                 *[
-                    cast(m.getItem(f.name), f.dataType).alias(f.name)
+                    parse(m.getItem(f.name), f.dataType).alias(f.name)
                     for f in payload.fields
                 ]
             ),

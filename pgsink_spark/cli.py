@@ -248,6 +248,34 @@ def cmd_serve(args) -> int:
     return 0
 
 
+def _fan_out(df, entries: dict, write) -> None:
+    """Write one generic micro-batch to every table it carries:
+    ``write(typed_envelope, namespace, name)`` once per table.
+
+    The batch is persisted once and every table's slice is cut from
+    that copy. Each action on an unpersisted foreachBatch DataFrame
+    re-runs its source plan, so without it every slice (and the
+    sampling pass of the warehouse's range partitioning) would decode
+    the whole batch again. MEMORY_AND_DISK lets an unbounded catch-up
+    batch spill to disk instead of failing."""
+    from pyspark import StorageLevel
+    from pyspark.sql import functions as F
+
+    from pgsink_spark.changelog.envelope import cast_envelope
+
+    df.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        # per-table loop is control-plane-sized (table count, not row
+        # count); each table's slice writes as one typed batch
+        for (ns, name), e in entries.items():
+            part = df.where(
+                (F.col("namespace") == ns) & (F.col("name") == name)
+            )
+            write(cast_envelope(part, e.payload), ns, name)
+    finally:
+        df.unpersist()
+
+
 def cmd_stream(args) -> int:
     """Capture → pgoutput streaming source → sink, availableNow.
 
@@ -258,20 +286,38 @@ def cmd_stream(args) -> int:
     payload (cast_envelope), and raw appends are exactly-once via the
     epoch ledger (epoch = Spark batch id)."""
     from pgsink_spark.session import get_spark
-    from pgsink_spark.streaming.datasource import register
+    from pgsink_spark.streaming.datasource import (
+        CaptureIndex,
+        confirm_committed,
+        register,
+    )
 
     spark = get_spark("pgsink-stream")
     register(spark)
+    # one driver-side scan of the capture per tick (refresh scans only
+    # bytes it has not seen): the commit index sizes a bounded drain,
+    # its relation offsets are the capture's DDL
+    idx = CaptureIndex(args.capture)
+
+    def discover(handle_schema) -> dict:
+        """Schema discovery: relation messages are the capture's DDL
+        (schema_handler.go Handle — raw table + view synced per novel
+        fingerprint)."""
+        from pgsink_spark.changelog.registry import entry_from_relation
+
+        idx.refresh()
+        entries = {}
+        for msg in idx.relations():
+            e = entry_from_relation(msg)
+            handle_schema(e)
+            entries[(e.namespace, e.name)] = e
+        return entries
 
     if getattr(args, "sink", "ndjson") == "bigquery":
-        from pgsink_spark.changelog.envelope import cast_envelope
-        from pgsink_spark.changelog.registry import entry_from_relation
         from pgsink_spark.sinks.bigquery import (
             BigQuerySink,
             BigQuerySinkOptions,
         )
-        from pgsink_spark.streaming.datasource import read_capture
-        from pgsink_spark.streaming.decoder import Relation, decode_message
 
         out = f"{args.bq_project}.{args.bq_dataset} ({args.bq_api_base})"
         bq = BigQuerySink(
@@ -283,72 +329,37 @@ def cmd_stream(args) -> int:
                 use_load_jobs=args.bq_load_jobs,
             )
         )
-        # schema discovery: relation messages are the capture's DDL
-        # (schema_handler.go Handle — raw table + view synced per
-        # novel fingerprint)
-        entries = {}
-        for buf in read_capture(args.capture):
-            msg = decode_message(buf)
-            if isinstance(msg, Relation):
-                e = entry_from_relation(msg)
-                bq.handle_schema(e)
-                entries[(e.namespace, e.name)] = e
+        entries = discover(bq.handle_schema)
 
         def sink(df, batch_id):
-            from pyspark.sql import functions as F
-
             # delivery is at-least-once into BigQuery; replayed batches
             # dedup best-effort via {lsn}-{sequence} insertIds (the
             # warehouse sink's epoch ledger has no BQ analogue — the
             # compaction VIEW is what guarantees read-side correctness,
             # exactly the reference's posture)
-            for (ns, name), e in entries.items():
-                part = df.where(
-                    (F.col("namespace") == ns) & (F.col("name") == name)
-                )
-                bq.insert(cast_envelope(part, e.payload), ns, name)
+            _fan_out(df, entries, bq.insert)
 
     elif getattr(args, "sink", "ndjson") == "warehouse":
-        from pgsink_spark.changelog.envelope import cast_envelope
-        from pgsink_spark.changelog.registry import entry_from_relation
         from pgsink_spark.sinks.warehouse import WarehouseSink
-        from pgsink_spark.streaming.datasource import read_capture
-        from pgsink_spark.streaming.decoder import Relation, decode_message
 
         out = os.path.join(args.root, "sink", "warehouse")
         wh = WarehouseSink(spark, out)
-        # schema discovery: relation messages are the capture's DDL
-        entries = {}
-        for buf in read_capture(args.capture):
-            msg = decode_message(buf)
-            if isinstance(msg, Relation):
-                e = entry_from_relation(msg)
-                wh.handle_schema(e)
-                entries[(e.namespace, e.name)] = e
+        entries = discover(wh.handle_schema)
 
         def sink(df, batch_id):
-            from pyspark.sql import functions as F
-
-            # per-table loop is control-plane-sized (table count, not
-            # row count); each table's slice writes as one typed batch
-            for (ns, name), e in entries.items():
-                part = df.where(
-                    (F.col("namespace") == ns) & (F.col("name") == name)
-                )
-                res = wh.insert(
-                    cast_envelope(part, e.payload), ns, name, epoch=batch_id
-                )
+            def write(typed, ns, name):
+                res = wh.insert(typed, ns, name, epoch=batch_id)
                 if res.count:
                     # publish the committed snapshot so readers never
                     # observe a mid-batch file set
                     wh.commit_manifest(ns, name)
 
+            _fan_out(df, entries, write)
+
     else:
         out = os.path.join(args.root, "sink", "modifications")
 
         def sink(df, _bid):
-            from pyspark.sql import functions as F
-
             from pgsink_spark.changelog.envelope import operation
 
             (
@@ -359,6 +370,7 @@ def cmd_stream(args) -> int:
             )
 
     max_commits = getattr(args, "max_commits", 0)
+    checkpoint = os.path.join(args.root, "checkpoints", "stream")
 
     def run_once():
         reader = spark.readStream.format("pgoutput").option(
@@ -375,29 +387,26 @@ def cmd_stream(args) -> int:
         q = (
             reader.load()
             .writeStream.foreachBatch(sink)
-            .option(
-                "checkpointLocation",
-                os.path.join(args.root, "checkpoints", "stream"),
-            )
+            .option("checkpointLocation", checkpoint)
             .trigger(availableNow=True)
             .start()
         )
         q.awaitTermination()
+        # Spark confirms batch N to the source only when it plans batch
+        # N+1, so a run that stops never confirms its last batch: do it
+        # here, from the checkpoint's last committed batch (a run that
+        # planned nothing re-confirms the previous run's end)
+        confirm_committed(args.capture, checkpoint)
 
+    # availableNow captures the first (rate-limited) offset and stops
+    # there, so a bounded drain loops availableNow runs, each advancing
+    # <= max_commits commits; the capture is finite, so the commit index
+    # gives the run count up front
+    n_runs = 1
     if max_commits:
-        # availableNow captures the first (rate-limited) offset and
-        # stops there, so a bounded drain loops availableNow runs —
-        # each advances ≤ max_commits commits. The capture is finite,
-        # so the run count is known up front from the commit index
-        # (+1 no-op run so the final batch's offset gets committed).
-        from pgsink_spark.streaming.datasource import CaptureIndex
-
-        idx = CaptureIndex(args.capture)
         idx.refresh()
-        n_runs = (len(idx.commits) + max_commits - 1) // max_commits + 1
-        for _ in range(n_runs):
-            run_once()
-    else:
+        n_runs = -(-len(idx.commits) // max_commits)
+    for _ in range(max(1, n_runs)):  # an empty capture still runs once
         run_once()
     print(f"streamed to {out}")
     return 0

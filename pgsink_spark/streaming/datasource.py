@@ -21,6 +21,7 @@ happens downstream via the schema registry).
 
 from __future__ import annotations
 
+import json
 import os
 import struct
 from dataclasses import dataclass
@@ -60,20 +61,10 @@ def append_capture(path: str, payloads: list[bytes]) -> None:
 
 
 def read_capture(path: str) -> list[bytes]:
-    """Whole frames only: a file truncated mid-frame (crash during an
-    append) reads cleanly up to the last complete frame, matching
-    iter_capture_from's contract."""
-    out = []
-    with open(path, "rb") as f:
-        while True:
-            head = f.read(4)
-            if len(head) < 4:
-                return out
-            (n,) = struct.unpack(">I", head)
-            buf = f.read(n)
-            if len(buf) < n:
-                return out
-            out.append(buf)
+    """Every whole frame of a capture: a file truncated mid-frame
+    (crash during an append) reads cleanly up to the last complete
+    frame."""
+    return [buf for _pos, buf in iter_capture_from(path)]
 
 
 def iter_capture_from(path: str, offset: int = 0):
@@ -170,17 +161,25 @@ class CaptureIndex:
         off, nrel = best
         return off, self.rel_offsets[:nrel]
 
+    def relations(self) -> list:
+        """The capture's Relation messages (its DDL), in arrival order,
+        read by seeking to each indexed relation frame."""
+        from pgsink_spark.streaming.decoder import decode_message
 
-def _scan_commits(path: str) -> int:
-    """Highest commit LSN present in the capture (0 when empty)."""
-    from pgsink_spark.streaming.decoder import Commit, decode_message
+        return [decode_message(b) for b in _frames_at(self.path, self.rel_offsets)]
 
-    top = 0
-    for buf in read_capture(path):
-        msg = decode_message(buf)
-        if isinstance(msg, Commit):
-            top = max(top, msg.commit_lsn)
-    return top
+
+def _frames_at(path: str, offsets) -> list[bytes]:
+    """The frames starting at the given byte offsets (one seek each)."""
+    out = []
+    if not offsets:
+        return out  # the file may not exist yet
+    with open(path, "rb") as f:
+        for off in offsets:
+            f.seek(off)
+            (n,) = struct.unpack(">I", f.read(4))
+            out.append(f.read(n))
+    return out
 
 
 @dataclass
@@ -303,12 +302,8 @@ class PgoutputStreamReader(DataSourceStreamReader):
         # relation frames that precede the seek point: replay just them
         # (each is a seek + one tiny frame read) so DML after the seek
         # finds its table even when its Relation message is far behind
-        if partition.rel_offsets:
-            with open(partition.path, "rb") as f:
-                for off in partition.rel_offsets:
-                    f.seek(off)
-                    (n,) = struct.unpack(">I", f.read(4))
-                    cache.register(decode_message(f.read(n)))
+        for buf in _frames_at(partition.path, partition.rel_offsets):
+            cache.register(decode_message(buf))
         # Arrow-batched emit: the Python source's per-row pickle is the
         # hot-path killer (measured: tuple yield caps the e2e stream at
         # ~8k rows/s while the decode loop itself does ~100k). Yielding
@@ -377,22 +372,70 @@ class PgoutputStreamReader(DataSourceStreamReader):
     def commit(self, end: dict) -> None:
         """Checkpoint-commit hook → confirmed-flush LSN.
 
-        Spark calls this when every sink for the micro-batch has
-        committed; mirroring stream.Confirm + standby status. The
+        Mirrors stream.Confirm + standby status: the ``.confirmed``
         offset file is what a live socket writer reads to set
-        ``ReplicationClient.flush_lsn``.
+        ``ReplicationClient.flush_lsn``. Spark hands batch N's end
+        offset to this hook only when it plans batch N+1, so in a
+        query that stops (every availableNow run) the last batch is
+        never confirmed here; ``confirm_committed`` confirms it from
+        the checkpoint after the query terminates.
         """
-        from pgsink_spark.streaming.offsets import OffsetStore
+        confirm_lsn(self.path, end["lsn"])
 
-        store = OffsetStore(self.path + ".confirmed")
-        if store.confirmed_lsn is None or end["lsn"] > store.confirmed_lsn:
-            store.confirm(end["lsn"])
+
+def confirm_lsn(path: str, lsn: int) -> None:
+    """Advance the capture's confirmed LSN; never moves it backwards."""
+    from pgsink_spark.streaming.offsets import OffsetStore
+
+    store = OffsetStore(path + ".confirmed")
+    if store.confirmed_lsn is None or lsn > store.confirmed_lsn:
+        store.confirm(lsn)
+
+
+def confirm_committed(path: str, checkpoint: str) -> None:
+    """Confirm the end offset of the checkpoint's last committed batch.
+
+    The highest batch id in ``<checkpoint>/commits`` names that batch;
+    its ``offsets`` entry holds, after the version and metadata lines,
+    this (single) source's end offset. Reading the checkpoint, not the
+    query's last progress, also covers a run that planned no batch.
+    Before the first commit there is nothing to confirm."""
+    try:
+        done = [
+            int(f) for f in os.listdir(os.path.join(checkpoint, "commits"))
+            if f.isdigit()
+        ]
+    except FileNotFoundError:
+        return
+    if not done:
+        return
+    with open(os.path.join(checkpoint, "offsets", str(max(done)))) as f:
+        confirm_lsn(path, json.loads(f.read().splitlines()[2])["lsn"])
+
+
+def _bytea_text(v: bytes) -> str:
+    return "\\x" + v.hex()
+
+
+def _array_text(v: list) -> str:
+    return json.dumps([None if x is None else _text(x) for x in v])
+
+
+# decoded values whose str() is not the text cast_envelope parses back
+_TEXT = {bytes: _bytea_text, list: _array_text}
+
+
+def _text(v) -> str:
+    """One decoded value as the text ``cast_envelope`` parses: bytea in
+    pgoutput's hex form (``\\x0102ff``), an array as a JSON list of
+    its elements' texts (``["1",null,"a,b"]``), anything else str()."""
+    return _TEXT.get(type(v), str)(v)
 
 
 def _stringify(d: dict | None) -> dict | None:
     if d is None:
         return None
-    return {k: (None if v is None else str(v)) for k, v in d.items()}
+    return {k: (None if v is None else _text(v)) for k, v in d.items()}
 
 
 class PgoutputDataSource(DataSource):

@@ -211,7 +211,6 @@ def capture_to_file(
     disk. Restarting simply resumes from the slot's confirmed LSN —
     the same at-least-once + read-time-dedup posture as the reference.
     """
-    import os as _os
     import time as _time
 
     # the capture file is the durable cursor: a crash BETWEEN append
@@ -219,11 +218,9 @@ def capture_to_file(
     # (re)start we read the file's highest commit LSN and drop any
     # replayed transaction at or below it — appends stay exactly-once
     # even though delivery is at-least-once
-    from pgsink_spark.streaming.datasource import _scan_commits
+    from pgsink_spark.streaming.datasource import CaptureIndex
 
-    already = (
-        _scan_commits(out_path) if _os.path.exists(out_path) else 0
-    )
+    already = CaptureIndex(out_path).refresh()
 
     target = parse_lsn(client.identify_system()["xlogpos"])
     # a just-dropped previous holder's walsender may still be winding
