@@ -277,7 +277,8 @@ def _fan_out(df, entries: dict, write) -> None:
 
 
 def cmd_stream(args) -> int:
-    """Capture → pgoutput streaming source → sink, availableNow.
+    """Capture → pgoutput streaming source → sink: one query drains
+    the capture as it stands, then stops.
 
     ``--sink ndjson`` (default) appends generic envelopes as NDJSON;
     ``--sink warehouse`` runs the full typed warehouse path: relation
@@ -290,21 +291,19 @@ def cmd_stream(args) -> int:
         CaptureIndex,
         confirm_committed,
         register,
+        resume_lsn,
     )
 
     spark = get_spark("pgsink-stream")
     register(spark)
-    # one driver-side scan of the capture per tick (refresh scans only
-    # bytes it has not seen): the commit index sizes a bounded drain,
-    # its relation offsets are the capture's DDL
-    idx = CaptureIndex(args.capture)
 
     def discover(handle_schema) -> dict:
         """Schema discovery: relation messages are the capture's DDL
         (schema_handler.go Handle — raw table + view synced per novel
-        fingerprint)."""
+        fingerprint), found by one scan of the capture's commit index."""
         from pgsink_spark.changelog.registry import entry_from_relation
 
+        idx = CaptureIndex(args.capture)
         idx.refresh()
         entries = {}
         for msg in idx.relations():
@@ -371,43 +370,34 @@ def cmd_stream(args) -> int:
 
     max_commits = getattr(args, "max_commits", 0)
     checkpoint = os.path.join(args.root, "checkpoints", "stream")
-
-    def run_once():
-        reader = spark.readStream.format("pgoutput").option(
-            "path", args.capture
-        )
-        if max_commits:
-            reader = reader.option(
-                "maxcommitspertrigger", str(max_commits)
-            )
-        if getattr(args, "decode_slices", 0):
-            reader = reader.option(
-                "maxpartitions", str(args.decode_slices)
-            )
-        q = (
-            reader.load()
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # Spark confirms batch N to the source only when it plans batch
-        # N+1, so a run that stops never confirms its last batch: do it
-        # here, from the checkpoint's last committed batch (a run that
-        # planned nothing re-confirms the previous run's end)
-        confirm_committed(args.capture, checkpoint)
-
-    # availableNow captures the first (rate-limited) offset and stops
-    # there, so a bounded drain loops availableNow runs, each advancing
-    # <= max_commits commits; the capture is finite, so the commit index
-    # gives the run count up front
-    n_runs = 1
+    # one query per tick: the reader caps each window at max_commits
+    # and plans window after window by itself. Over an existing
+    # checkpoint Spark resumes from its offset log, so startlsn is
+    # only the pacing floor: the first window starts where the log ends
+    reader = (
+        spark.readStream.format("pgoutput")
+        .option("path", args.capture)
+        .option("startlsn", str(resume_lsn(checkpoint)))
+    )
     if max_commits:
-        idx.refresh()
-        n_runs = -(-len(idx.commits) // max_commits)
-    for _ in range(max(1, n_runs)):  # an empty capture still runs once
-        run_once()
+        reader = reader.option("maxcommitspertrigger", str(max_commits))
+    if getattr(args, "decode_slices", 0):
+        reader = reader.option("maxpartitions", str(args.decode_slices))
+    q = (
+        reader.load()
+        .writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint)
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    # Spark confirms batch N to the source only when it plans batch
+    # N+1, so a query that stops never confirms its last batch: do it
+    # here, from the checkpoint's last committed batch (a run with no
+    # new data re-confirms the previous run's end)
+    confirm_committed(args.capture, checkpoint)
     print(f"streamed to {out}")
     return 0
 
@@ -417,10 +407,10 @@ def cmd_run(args) -> int:
     app.go:97-478 wires subscription manager + import manager/workers +
     sink into one process): reconcile the publication against the
     catalog, enqueue + drain import jobs for newly published tables,
-    then drain the CDC capture into the warehouse sink. availableNow
-    semantics — each invocation converges to current state and exits,
-    so cron/systemd owns the cadence (the Spark-operational analogue of
-    the reference's long-running loops)."""
+    then drain the CDC capture into the warehouse sink. Each invocation
+    converges to current state and exits, so cron/systemd owns the
+    cadence (the Spark-operational analogue of the reference's
+    long-running loops)."""
     from pgsink_spark.control.publication import reconcile
     from pgsink_spark.control.tracing import InMemorySpanExporter, Tracer
     from pgsink_spark.session import get_spark

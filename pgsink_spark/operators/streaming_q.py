@@ -884,13 +884,12 @@ def stream_band_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # 32 cores (~2 s serial at sf0.1 — measured: the identical
         # batch compute drops 1.37 → 0.65 s once fanned out). Fan the
         # text rows across the session's cores BEFORE the fold — the
-        # stateful groupBy re-shuffles to ck keys right after, so this
-        # adds one tiny text-row exchange only when the source is
-        # narrower than the cluster (same rationale as dedup.widen; at
-        # real scale the source already yields ≥ cores splits and the
-        # repartition is sized by the same count). The chunk rows come
-        # from one let-bound generator (simhash evaluated once per
-        # doc; see simhash_chunk_rows_col).
+        # stateful groupBy re-shuffles to ck keys right after. Unlike
+        # dedup.widen this is not gated on the source's width: every
+        # batch pays one round-robin exchange of all its text rows,
+        # sized by the session's parallelism. The chunk rows come from
+        # one let-bound generator (simhash evaluated once per doc; see
+        # simhash_chunk_rows_col).
         fanout = raw.sparkSession.sparkContext.defaultParallelism
         chunks = (
             raw.repartition(fanout)

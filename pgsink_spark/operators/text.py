@@ -835,7 +835,7 @@ def text_zipf_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     flat — a standard corpus-health check before training).
 
     Scale shape: term frequencies are one token-keyed agg with map-side
-    partial counts; the top-500 cut is orderBy+limit (planned as
+    partial counts; the top-500 cut is orderBy+limit (executed as
     TakeOrderedAndProject — per-partition heaps, never a global sort of
     the vocabulary); the rank window and the regression then run over
     exactly 500 rows, control-plane sized. The slope is rounded through
@@ -1179,7 +1179,7 @@ def text_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank-ordered with a word tiebreak.
 
     Plan: one (word) census (map-side combined), top-K cut as
-    orderBy+limit — planned as TakeOrderedAndProject (per-partition
+    orderBy+limit — executed as TakeOrderedAndProject (per-partition
     heaps over the vocabulary census, identical rows to the rank
     form's ``rnk <= K`` under the same (c DESC, word) order, and no
     single-partition rank window over a vocabulary-growing frame —

@@ -205,20 +205,16 @@ class PgoutputStreamReader(DataSourceStreamReader):
         # backpressure (the reference bounds its channel buffers,
         # importer.go:107; Spark sources bound the OFFSET RANGE):
         # each micro-batch advances at most this many commits past the
-        # last planned offset, so a deep capture backlog drains as
+        # previous window's end, so a deep capture backlog drains as
         # bounded batches instead of one giant catch-up batch
         self.max_commits = int(options.get("maxcommitspertrigger", "0"))
         self.options_maxpartitions = int(options.get("maxpartitions", "1"))
-        # scope for the planned-watermark sidecar (bounded drain). Two
-        # queries reading the same capture with the same scope would
-        # share one watermark and the later one would lose backpressure
-        # pacing — pass a per-query id (e.g. derived from the
-        # checkpoint location) to give each drain its own sidecar.
-        self.drain_id = options.get("drainid", "")
         # driver-side tail index: each poll scans only appended bytes,
         # each batch read seeks — O(new data) per batch, not O(file)
         self._index = CaptureIndex(self.path)
-        self._last_planned = self.start_from
+        # pacing floor; over an existing checkpoint a fresh reader
+        # starts it at startlsn=resume_lsn(checkpoint)
+        self._paced_to = self.start_from
 
     def initialOffset(self) -> dict:
         return {"lsn": self.start_from}
@@ -226,30 +222,24 @@ class PgoutputStreamReader(DataSourceStreamReader):
     def latestOffset(self) -> dict:
         top = max(self.start_from, self._index.refresh())
         if self.max_commits > 0:
-            # the planned watermark persists in a sidecar (monotonic,
-            # same OffsetStore contract as the confirmed file) so a
-            # restarted reader — each availableNow run builds a fresh
-            # one — continues the bounded drain instead of re-planning
-            # the same first window. Sizing metadata only: a stale or
-            # shared sidecar can only make a batch larger, never skip
-            # or duplicate data (offsets own correctness; partitions()
-            # reads strictly (start, end] from the checkpointed start).
-            # The sidecar is scoped by `drainid` so concurrent queries
-            # over one capture don't share a watermark.
-            from pgsink_spark.streaming.offsets import OffsetStore
-
-            suffix = f".planned.{self.drain_id}" if self.drain_id else ".planned"
-            store = OffsetStore(self.path + suffix)
-            start = max(self._last_planned, store.confirmed_lsn or 0)
-            ahead = [lsn for lsn, _off, _n in self._index.commits if lsn > start]
+            ahead = [
+                lsn for lsn, _off, _n in self._index.commits
+                if lsn > self._paced_to
+            ]
             if len(ahead) > self.max_commits:
                 top = ahead[self.max_commits - 1]
-            if top > (store.confirmed_lsn or 0):
-                store.confirm(top)
-        self._last_planned = max(self._last_planned, top)
+        self._paced_to = max(self._paced_to, top)
         return {"lsn": top}
 
     def partitions(self, start: dict, end: dict):
+        if end["lsn"] < start["lsn"]:
+            # an unfloored reader over an existing checkpoint: the
+            # next batch would start at `end` and re-read committed rows
+            raise ValueError(
+                f"window end {end['lsn']} is behind the resumed offset "
+                f"{start['lsn']}: a reader over an existing checkpoint "
+                "needs startlsn=resume_lsn(checkpoint)"
+            )
         # WAL total order is DATA — (lsn, sequence) on every row — not
         # partition order: sinks elect rows by that key at read time,
         # so a batch may decode in parallel. The commit index lets us
@@ -376,9 +366,9 @@ class PgoutputStreamReader(DataSourceStreamReader):
         offset file is what a live socket writer reads to set
         ``ReplicationClient.flush_lsn``. Spark hands batch N's end
         offset to this hook only when it plans batch N+1, so in a
-        query that stops (every availableNow run) the last batch is
-        never confirmed here; ``confirm_committed`` confirms it from
-        the checkpoint after the query terminates.
+        query that stops the last batch is never confirmed here;
+        ``confirm_committed`` confirms it from the checkpoint after the
+        query stops.
         """
         confirm_lsn(self.path, end["lsn"])
 
@@ -392,25 +382,41 @@ def confirm_lsn(path: str, lsn: int) -> None:
         store.confirm(lsn)
 
 
-def confirm_committed(path: str, checkpoint: str) -> None:
-    """Confirm the end offset of the checkpoint's last committed batch.
-
-    The highest batch id in ``<checkpoint>/commits`` names that batch;
-    its ``offsets`` entry holds, after the version and metadata lines,
-    this (single) source's end offset. Reading the checkpoint, not the
-    query's last progress, also covers a run that planned no batch.
-    Before the first commit there is nothing to confirm."""
+def _logged_end(checkpoint: str, log: str) -> int | None:
+    """End offset of the highest batch id in ``<checkpoint>/<log>``
+    (``offsets``: logged, ``commits``: committed), None before the
+    first. That batch's ``offsets`` entry holds, after the version and
+    metadata lines, this (single) source's end offset."""
     try:
-        done = [
-            int(f) for f in os.listdir(os.path.join(checkpoint, "commits"))
+        ids = [
+            int(f) for f in os.listdir(os.path.join(checkpoint, log))
             if f.isdigit()
         ]
     except FileNotFoundError:
-        return
-    if not done:
-        return
-    with open(os.path.join(checkpoint, "offsets", str(max(done)))) as f:
-        confirm_lsn(path, json.loads(f.read().splitlines()[2])["lsn"])
+        return None
+    if not ids:
+        return None
+    with open(os.path.join(checkpoint, "offsets", str(max(ids)))) as f:
+        return json.loads(f.read().splitlines()[2])["lsn"]
+
+
+def resume_lsn(checkpoint: str) -> int:
+    """Where a query over ``checkpoint`` resumes: the end offset of the
+    last logged batch (Spark re-runs it first if it never committed),
+    0 for a new checkpoint. Pass it as ``startlsn`` so a paced reader
+    plans its first window from there."""
+    return _logged_end(checkpoint, "offsets") or 0
+
+
+def confirm_committed(path: str, checkpoint: str) -> None:
+    """Confirm the end offset of the checkpoint's last committed batch.
+
+    Reading the checkpoint, not the query's last progress, also covers
+    a run with no new batch. Before the first commit there is
+    nothing to confirm."""
+    lsn = _logged_end(checkpoint, "commits")
+    if lsn is not None:
+        confirm_lsn(path, lsn)
 
 
 def _bytea_text(v: bytes) -> str:

@@ -31,7 +31,7 @@ Options (all strings, DataSource API):
   slot, publication      — replication identity (created if missing)
   tables                 — optional "ns.t1,ns.t2" publication sync list
   path                   — spool capture file (required)
-  maxcommitspertrigger / maxpartitions / drainid — file-half options
+  maxcommitspertrigger / maxpartitions / startlsn — file-half options
 """
 
 from __future__ import annotations

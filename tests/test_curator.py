@@ -142,6 +142,8 @@ def test_curator_fed_by_cdc_source(spark, tmp_path):
         if docs.take(1):
             cur.apply_batch(docs)
 
+    # bounded drain: one query plans one commit per batch until all
+    # three txns are consumed
     q = (
         spark.readStream.format("pgoutput")
         .option("path", cap)
@@ -149,23 +151,10 @@ def test_curator_fed_by_cdc_source(spark, tmp_path):
         .load()
         .writeStream.foreachBatch(flush)
         .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
-    # bounded drain: loop availableNow until all three txns consumed
-    for _ in range(4):
-        q = (
-            spark.readStream.format("pgoutput")
-            .option("path", cap)
-            .option("maxcommitspertrigger", "1")
-            .load()
-            .writeStream.foreachBatch(flush)
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    q.processAllAvailable()
+    q.stop()
 
     batch_cur = IncrementalCurator(spark, str(tmp_path / "cur_batch"))
     src = spark.createDataFrame(rows, payload)

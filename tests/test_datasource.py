@@ -366,33 +366,38 @@ def test_capture_index_property_random_streams(tmp_path):
     check()
 
 
-def test_drain_sidecar_is_scoped_per_query(tmp_path):
-    """Two bounded-drain readers over ONE capture with distinct
-    drainid values keep independent planned watermarks — without the
-    scope the second query lost all backpressure pacing (round-3
-    advice). Same drainid (or none) shares the sidecar as before."""
+def test_paced_reader_floor_independence_and_backward_range(tmp_path):
+    """A paced reader built with startlsn plans its windows from that
+    floor; two readers over one capture pace independently (each keeps
+    its own floor, nothing is shared on disk); and a backward range,
+    which an unfloored reader over an existing checkpoint would plan,
+    raises instead of letting the next batch re-read committed rows."""
     import os
+
+    import pytest
 
     path = str(tmp_path / "wal.capture")
     append_capture(
         path,
         _txn(100, 7, (1, "a")) + _txn(200, 8, (2, "b")) + _txn(300, 9, (3, "c")),
     )
-    r1 = PgoutputStreamReader(
-        {"path": path, "maxcommitspertrigger": "1", "drainid": "qa"}
+    floored = PgoutputStreamReader(
+        {"path": path, "maxcommitspertrigger": "1", "startlsn": "100"}
     )
-    r2 = PgoutputStreamReader(
-        {"path": path, "maxcommitspertrigger": "1", "drainid": "qb"}
-    )
+    assert floored.latestOffset() == {"lsn": 200}
+    assert floored.latestOffset() == {"lsn": 300}
+    assert floored.latestOffset() == {"lsn": 300}
+
+    r1 = PgoutputStreamReader({"path": path, "maxcommitspertrigger": "1"})
+    r2 = PgoutputStreamReader({"path": path, "maxcommitspertrigger": "1"})
     assert r1.latestOffset() == {"lsn": 100}
     assert r1.latestOffset() == {"lsn": 200}
-    # qb starts its own drain from the beginning, one commit at a time
     assert r2.latestOffset() == {"lsn": 100}
-    assert sorted(
-        f for f in os.listdir(tmp_path) if f.startswith("wal.capture.planned")
-    ) == ["wal.capture.planned.qa", "wal.capture.planned.qb"]
-    # a restarted qa reader resumes ITS drain where it left off
-    r1b = PgoutputStreamReader(
-        {"path": path, "maxcommitspertrigger": "1", "drainid": "qa"}
-    )
-    assert r1b.latestOffset() == {"lsn": 300}
+    assert r1.latestOffset() == {"lsn": 300}
+    assert r2.latestOffset() == {"lsn": 200}
+    assert os.listdir(tmp_path) == ["wal.capture"]
+
+    with pytest.raises(ValueError, match=r"startlsn=resume_lsn\(checkpoint\)"):
+        r2.partitions({"lsn": 300}, {"lsn": 100})
+    # an empty range (nothing new since the resumed offset) is fine
+    assert r2.partitions({"lsn": 300}, {"lsn": 300})

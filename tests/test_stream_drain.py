@@ -1,7 +1,8 @@
 """`stream run --sink warehouse` end to end on small captures: a bounded
-drain reads each row from the source once, starts one query per window,
-confirms the capture's last commit, and bytea and array columns land
-exactly as they were committed."""
+drain reads each row from the source once, starts one query whatever
+the window size (also when it resumes an existing checkpoint), confirms
+the capture's last commit, and bytea and array columns land exactly as
+they were committed."""
 
 from __future__ import annotations
 
@@ -82,9 +83,22 @@ def _listener():
     return Listener()
 
 
+def _drain_capture(root, cap, max_commits, spark):
+    """One `stream run` at --max-commits; (queries started, source rows
+    read) from a listener around it."""
+    lst = _listener()
+    spark.streams.addListener(lst)
+    try:
+        _stream(root, cap, "--max-commits", str(max_commits))
+        lst.settle()
+    finally:
+        spark.streams.removeListener(lst)
+    return lst.started, lst.rows
+
+
 def test_bounded_drain_reads_once_and_confirms_last_commit(tmp_path, spark):
-    """5 commits over 3 tables at --max-commits 2: 3 queries (no extra
-    no-op run), every row read from the source once however many tables
+    """5 commits over 3 tables at --max-commits 2: one query plans all
+    3 windows, every row read from the source once however many tables
     a batch fans out to, and the last commit confirmed; a rerun with no
     new data restores a lost confirmation from the checkpoint."""
     rels = [_rel(16400 + i, f"t{i}", ("v", TEXT)) for i in range(3)]
@@ -104,21 +118,15 @@ def test_bounded_drain_reads_once_and_confirms_last_commit(tmp_path, spark):
     append_capture(cap, frames)
     root = str(tmp_path / "state")
 
-    lst = _listener()
-    spark.streams.addListener(lst)
-    try:
-        _stream(root, cap, "--max-commits", "2")
-        lst.settle()
-    finally:
-        spark.streams.removeListener(lst)
+    started, read = _drain_capture(root, cap, 2, spark)
     written = sum(
         spark.read.parquet(os.path.join(
             root, "sink", "warehouse", f"public_{r.name}_raw")).count()
         for r in rels
     )
     assert written == n_rows
-    assert lst.rows == n_rows
-    assert lst.started == 3  # ceil(5 commits / 2)
+    assert read == n_rows
+    assert started == 1
     assert OffsetStore(cap + ".confirmed").confirmed_lsn == lsns[-1]
     assert _view_rows(spark, root, rels[0])[1] == ("v4",)
 
@@ -130,6 +138,39 @@ def test_bounded_drain_reads_once_and_confirms_last_commit(tmp_path, spark):
             root, "sink", "warehouse", f"public_{r.name}_raw")).count()
         for r in rels
     ) == n_rows
+
+
+def test_rerun_resumes_paced_from_checkpoint(tmp_path, spark):
+    """Drain 5 commits at --max-commits 3, append 3 more, rerun at
+    --max-commits 1: the rerun is one query that reads only the 6 new
+    rows, pacing from the checkpoint's last logged offset; without
+    that floor its fresh reader would plan a window behind the resumed
+    offset and re-read committed rows."""
+    rels = [_rel(16430 + i, f"r{i}") for i in range(2)]
+
+    def commits(first: int, n: int) -> tuple[list, list]:
+        frames, lsns = [], []
+        for i in range(first, first + n):
+            lsn = 100 * (i + 1)
+            msgs = [encode_relation(r) for r in rels] if i == 0 else []
+            msgs += [encode_insert(r.oid, (str(i + 1).encode(),)) for r in rels]
+            frames += _txn(lsn, *msgs)
+            lsns.append(lsn)
+        return frames, lsns
+
+    cap = str(tmp_path / "wal.capture")
+    root = str(tmp_path / "state")
+    frames, _ = commits(0, 5)
+    append_capture(cap, frames)
+    assert _drain_capture(root, cap, 3, spark) == (1, 10)
+
+    frames, lsns = commits(5, 3)
+    append_capture(cap, frames)
+    assert _drain_capture(root, cap, 1, spark) == (1, 6)
+    for r in rels:
+        assert spark.read.parquet(os.path.join(
+            root, "sink", "warehouse", f"public_{r.name}_raw")).count() == 8
+    assert OffsetStore(cap + ".confirmed").confirmed_lsn == lsns[-1]
 
 
 def test_bytea_roundtrip_through_warehouse(tmp_path, spark):
