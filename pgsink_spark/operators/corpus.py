@@ -33,7 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pgsink_spark.operators.relational import query, rnd, sorted_vocab_hapax
+from pgsink_spark.operators.registry import query
+from pgsink_spark.operators.relational import rnd, sorted_vocab_hapax
 from pgsink_spark.sources.fixtures import load_table
 
 SEG_WORDS = 10

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pgsink_spark.operators.relational import ORACLES, query
+from pgsink_spark.operators.registry import ORACLES, query
 from pgsink_spark.operators.sampling import _duckdb_bucket, hash_bucket
 from pgsink_spark.operators.text import _duck_count, _substr_count
 from pgsink_spark.sources.fixtures import load_table

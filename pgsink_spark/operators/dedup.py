@@ -40,6 +40,7 @@ import pandas as pd  # module-level so pandas_udf type hints resolve
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pgsink_spark.operators.registry import query
 from pgsink_spark.sources.fixtures import load_table
 
 N_HASHES = 32
@@ -52,6 +53,59 @@ HAMMING_THRESHOLD = 5
 # blocking on chunk equality has guaranteed recall at this threshold.
 SIMHASH_CHUNKS = 6
 SIMHASH_CHUNK_BITS = SIMHASH_BITS // SIMHASH_CHUNKS
+
+_DUCKDB_SHINGLES = """
+    toks AS (
+      SELECT doc_id, string_split(lower(text), ' ') AS w FROM documents
+    ), pos AS (
+      SELECT doc_id, w, unnest(range(1, len(w)-1)) AS i FROM toks
+      WHERE len(w) >= 3
+    ), sh AS (
+      SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS shingle
+      FROM pos
+    ), sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
+    pairs AS (
+      SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter
+      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+      GROUP BY 1, 2
+    ), jac AS (
+      SELECT d1, d2, inter * 1.0 / (s1.n + s2.n - inter) AS jac
+      FROM pairs JOIN sizes s1 ON s1.doc_id = d1 JOIN sizes s2 ON s2.doc_id = d2
+    )
+"""
+
+_EXACT_JACCARD_SQL = (
+    "WITH "
+    + _DUCKDB_SHINGLES
+    + " SELECT d1, d2 FROM jac WHERE jac >= 0.8 ORDER BY d1, d2"
+)
+
+_DUCKDB_SIMHASH = f"""
+    toks AS (
+      SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok
+      FROM documents
+    ), tf AS (
+      SELECT doc_id, tok, count(*) AS c FROM toks GROUP BY 1, 2
+    ), th AS (
+      SELECT doc_id, c,
+             CAST(concat('0x', substr(md5(tok), 1, 15)) AS BIGINT) AS h
+      FROM tf
+    ), bits AS (
+      SELECT doc_id, b,
+             CASE WHEN (h >> b) & 1 = 1 THEN c ELSE -c END AS v
+      FROM th, (SELECT unnest(range(0, {SIMHASH_BITS})) AS b) bs
+    ), sums AS (
+      SELECT doc_id, b, sum(v) AS s FROM bits GROUP BY 1, 2
+    ), fp AS (
+      SELECT doc_id,
+             -- BIGINT cast: DuckDB's integer SUM is HUGEINT, which
+             -- lands as float64 in the driver's pandas comparator
+             CAST(sum(CASE WHEN s > 0 THEN (CAST(1 AS BIGINT) << b)
+                           ELSE 0 END) AS BIGINT)
+               AS simhash
+      FROM sums GROUP BY doc_id
+    )
+"""
 
 
 def md5_hash60(c: Column) -> Column:
@@ -153,6 +207,15 @@ def word_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     )
 
 
+@query(
+    "dedup_exact",
+    """
+        WITH fp AS (SELECT doc_id, md5(text) AS fp FROM documents),
+        keep AS (SELECT fp, min(doc_id) AS keep_id FROM fp GROUP BY fp)
+        SELECT f.doc_id, f.fp, f.doc_id = k.keep_id AS keep
+        FROM fp f JOIN keep k ON f.fp = k.fp ORDER BY f.doc_id
+    """,
+)
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup decision per doc: fingerprint + keep flag (doc with
     the min doc_id in its fingerprint group is kept)."""
@@ -516,6 +579,7 @@ def _pair_jaccard(
     )
 
 
+@query("dedup_ngram_jaccard", _EXACT_JACCARD_SQL)
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact near-dup pairs: word-3-gram Jaccard ≥ 0.8, with the
     stop-shingle cap on candidate generation (the mandatory 100 TB
@@ -747,6 +811,11 @@ def _lsh_verified_pairs(
     )
 
 
+@query(
+    "dedup_minhash_lsh",
+    # MinHash+LSH is verified-exact at this threshold → same oracle.
+    _EXACT_JACCARD_SQL,
+)
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(32) + LSH(8 bands × 4) candidates, verified by exact
     Jaccard ≥ 0.8. With J≈0.98 planted dups, P(miss) ≈ (1-J⁴)⁸ < 1e-8,
@@ -856,6 +925,13 @@ def simhash_fingerprints(docs: DataFrame) -> DataFrame:
     return widen(docs).select("doc_id", simhash_col().alias("simhash"))
 
 
+@query(
+    "dedup_simhash",
+    f"""
+        WITH {_DUCKDB_SIMHASH}
+        SELECT doc_id, simhash FROM fp ORDER BY doc_id
+    """,
+)
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc 60-bit simhash fingerprints (engine-portable md5 bits)."""
     docs = load_table(spark, sf_dir, "documents")
@@ -864,6 +940,17 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(
+    "dedup_simhash_pairs",
+    f"""
+        WITH {_DUCKDB_SIMHASH}
+        SELECT a.doc_id AS d1, b.doc_id AS d2,
+               bit_count(xor(a.simhash, b.simhash)) AS hamming
+        FROM fp a JOIN fp b ON a.doc_id < b.doc_id
+        WHERE bit_count(xor(a.simhash, b.simhash)) <= {HAMMING_THRESHOLD}
+        ORDER BY d1, d2
+    """,
+)
 def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs: Hamming(simhash) ≤ 5, found by chunk
     blocking + exact verification.
@@ -910,33 +997,6 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["d1", "d2"])
         .orderBy("d1", "d2")
     )
-
-
-_DUCKDB_SHINGLES = """
-    toks AS (
-      SELECT doc_id, string_split(lower(text), ' ') AS w FROM documents
-    ), pos AS (
-      SELECT doc_id, w, unnest(range(1, len(w)-1)) AS i FROM toks
-      WHERE len(w) >= 3
-    ), sh AS (
-      SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS shingle
-      FROM pos
-    ), sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-    pairs AS (
-      SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ), jac AS (
-      SELECT d1, d2, inter * 1.0 / (s1.n + s2.n - inter) AS jac
-      FROM pairs JOIN sizes s1 ON s1.doc_id = d1 JOIN sizes s2 ON s2.doc_id = d2
-    )
-"""
-
-_EXACT_JACCARD_SQL = (
-    "WITH "
-    + _DUCKDB_SHINGLES
-    + " SELECT d1, d2 FROM jac WHERE jac >= 0.8 ORDER BY d1, d2"
-)
 
 
 # r10 optimization (guide §1.2 step 1): below this many edge rows the
@@ -1106,6 +1166,31 @@ def connected_components(
     return labels.select("node", F.col("lbl").alias("component"))
 
 
+@query(
+    "dedup_cluster",
+    # Transitive closure via recursive CTE: reach(a,b) holds every
+    # ordered pair connected by a path; canonical = min reachable.
+    (
+        "WITH RECURSIVE "
+        + _DUCKDB_SHINGLES
+        + """, dup AS (SELECT d1, d2 FROM jac WHERE jac >= 0.8),
+        edges AS (SELECT d1 AS a, d2 AS b FROM dup
+                  UNION SELECT d2, d1 FROM dup),
+        reach(a, b) AS (
+          SELECT a, b FROM edges
+          UNION
+          SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
+        ),
+        canon AS (SELECT a AS doc_id, MIN(b) AS mn FROM reach GROUP BY a)
+        SELECT d.doc_id,
+               LEAST(d.doc_id, COALESCE(c.mn, d.doc_id)) AS canonical_id,
+               d.doc_id = LEAST(d.doc_id, COALESCE(c.mn, d.doc_id))
+                 AS is_canonical
+        FROM documents d LEFT JOIN canon c ON c.doc_id = d.doc_id
+        ORDER BY d.doc_id
+    """
+    ),
+)
 def dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical-document assignment: connected components over the
     near-dup pair graph (exact word-3-gram Jaccard ≥ 0.8), canonical =
@@ -1147,35 +1232,14 @@ def dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("doc_id")
     )
 
-_DUCKDB_SIMHASH = f"""
-    toks AS (
-      SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok
-      FROM documents
-    ), tf AS (
-      SELECT doc_id, tok, count(*) AS c FROM toks GROUP BY 1, 2
-    ), th AS (
-      SELECT doc_id, c,
-             CAST(concat('0x', substr(md5(tok), 1, 15)) AS BIGINT) AS h
-      FROM tf
-    ), bits AS (
-      SELECT doc_id, b,
-             CASE WHEN (h >> b) & 1 = 1 THEN c ELSE -c END AS v
-      FROM th, (SELECT unnest(range(0, {SIMHASH_BITS})) AS b) bs
-    ), sums AS (
-      SELECT doc_id, b, sum(v) AS s FROM bits GROUP BY 1, 2
-    ), fp AS (
-      SELECT doc_id,
-             -- BIGINT cast: DuckDB's integer SUM is HUGEINT, which
-             -- lands as float64 in the driver's pandas comparator
-             CAST(sum(CASE WHEN s > 0 THEN (CAST(1 AS BIGINT) << b)
-                           ELSE 0 END) AS BIGINT)
-               AS simhash
-      FROM sums GROUP BY doc_id
-    )
-"""
 
-ORACLES: dict[str, str] = {
-    "contamination_check": """
+EVAL_SPLIT_ID = 50
+CONTAMINATION_THRESHOLD = 0.5
+
+
+@query(
+    "contamination_check",
+    """
         WITH toks AS (SELECT doc_id, string_split(lower(text), ' ') AS w
                       FROM documents
                       WHERE len(string_split(lower(text), ' ')) >= 3),
@@ -1196,56 +1260,7 @@ ORACLES: dict[str, str] = {
         WHERE i*1.0/(se.n + sc.n - i) >= 0.5
         ORDER BY eval_id, corpus_id
     """,
-    "dedup_exact": """
-        WITH fp AS (SELECT doc_id, md5(text) AS fp FROM documents),
-        keep AS (SELECT fp, min(doc_id) AS keep_id FROM fp GROUP BY fp)
-        SELECT f.doc_id, f.fp, f.doc_id = k.keep_id AS keep
-        FROM fp f JOIN keep k ON f.fp = k.fp ORDER BY f.doc_id
-    """,
-    "dedup_ngram_jaccard": _EXACT_JACCARD_SQL,
-    # MinHash+LSH is verified-exact at this threshold → same oracle.
-    "dedup_minhash_lsh": _EXACT_JACCARD_SQL,
-    # Transitive closure via recursive CTE: reach(a,b) holds every
-    # ordered pair connected by a path; canonical = min reachable.
-    "dedup_cluster": (
-        "WITH RECURSIVE "
-        + _DUCKDB_SHINGLES
-        + """, dup AS (SELECT d1, d2 FROM jac WHERE jac >= 0.8),
-        edges AS (SELECT d1 AS a, d2 AS b FROM dup
-                  UNION SELECT d2, d1 FROM dup),
-        reach(a, b) AS (
-          SELECT a, b FROM edges
-          UNION
-          SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-        ),
-        canon AS (SELECT a AS doc_id, MIN(b) AS mn FROM reach GROUP BY a)
-        SELECT d.doc_id,
-               LEAST(d.doc_id, COALESCE(c.mn, d.doc_id)) AS canonical_id,
-               d.doc_id = LEAST(d.doc_id, COALESCE(c.mn, d.doc_id))
-                 AS is_canonical
-        FROM documents d LEFT JOIN canon c ON c.doc_id = d.doc_id
-        ORDER BY d.doc_id
-    """
-    ),
-    "dedup_simhash": f"""
-        WITH {_DUCKDB_SIMHASH}
-        SELECT doc_id, simhash FROM fp ORDER BY doc_id
-    """,
-    "dedup_simhash_pairs": f"""
-        WITH {_DUCKDB_SIMHASH}
-        SELECT a.doc_id AS d1, b.doc_id AS d2,
-               bit_count(xor(a.simhash, b.simhash)) AS hamming
-        FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-        WHERE bit_count(xor(a.simhash, b.simhash)) <= {HAMMING_THRESHOLD}
-        ORDER BY d1, d2
-    """,
-}
-
-
-EVAL_SPLIT_ID = 50
-CONTAMINATION_THRESHOLD = 0.5
-
-
+)
 def contamination_check(
     spark: SparkSession,
     sf_dir: str,
@@ -1292,9 +1307,6 @@ def contamination_check(
         .select("eval_id", "corpus_id")
         .orderBy("eval_id", "corpus_id")
     )
-
-
-from pgsink_spark.operators.relational import query  # noqa: E402 — shared registry
 
 
 @query(
@@ -1793,14 +1805,14 @@ def bloom_contaminated(
     )
 
 
-@query("bloom_decontaminate")  # rows-only: probabilistic (FP-only) triage
 def bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-filter decontamination triage: corpus docs whose shingle
     hit-fraction against the eval Bloom bitset reaches t/(1+t) (the
     bound Jaccard ≥ t implies; same eval split and threshold as
     contamination_check). Approximate BY DESIGN — false positives
-    possible, false negatives impossible — so the registry check is
-    rows-only; the superset guarantee vs the exact path is pinned in
+    possible, false negatives impossible — so it has no oracle and is
+    not a registered query (bench.py and tools/gen_plans_md.py add it
+    directly); the superset guarantee vs the exact path is pinned in
     tests/test_dedup.py."""
     docs = load_table(spark, sf_dir, "documents")
     sh_eval = word_shingles(

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from pgsink_spark.operators.relational import query
+from pgsink_spark.operators.registry import query
 from pgsink_spark.operators.sampling import _duckdb_bucket as _duckdb_bucket_sql
 from pgsink_spark.operators.text import text_lang_id, text_quality_score
 from pgsink_spark.sources.fixtures import load_table

@@ -148,7 +148,7 @@ import tarfile
 
 from pyspark.sql import SparkSession
 
-from pgsink_spark.operators.relational import query
+from pgsink_spark.operators.registry import query
 from pgsink_spark.sources.fixtures import load_table
 
 WDS_SHARD_DOCS = 100

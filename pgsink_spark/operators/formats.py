@@ -35,7 +35,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pgsink_spark.operators.relational import dec, query, rnd
+from pgsink_spark.operators.registry import query
+from pgsink_spark.operators.relational import dec, rnd
 from pgsink_spark.sources.fixtures import load_table
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"

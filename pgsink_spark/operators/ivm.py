@@ -25,7 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pgsink_spark.changelog.envelope import payload_type_of, to_envelope
-from pgsink_spark.operators.relational import dec, query, rnd
+from pgsink_spark.operators.registry import query
+from pgsink_spark.operators.relational import dec, rnd
 from pgsink_spark.sinks.incremental_join import IncrementalJoinView
 from pgsink_spark.sources.fixtures import load_table
 

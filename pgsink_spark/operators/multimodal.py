@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pgsink_spark.functions import codecs
-from pgsink_spark.operators.relational import query
+from pgsink_spark.operators.registry import query
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -1050,7 +1050,7 @@ def mm_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _phash_clusters_oracle() -> str:
-    from pgsink_spark.operators.relational import ORACLES as _O
+    from pgsink_spark.operators.registry import ORACLES as _O
 
     neardup = _O["mm_phash_neardup"]
     return f"""

@@ -41,7 +41,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from pgsink_spark.operators.relational import query
+from pgsink_spark.operators.registry import query
 from pgsink_spark.operators.sampling import _duckdb_bucket, hash_bucket
 from pgsink_spark.sources.fixtures import load_table
 

@@ -28,7 +28,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from pgsink_spark.operators.relational import query
+from pgsink_spark.operators.registry import query
 from pgsink_spark.sources.fixtures import load_table
 
 # Java-regex ∩ RE2 portable patterns (no \b — RE2 and Java agree on it,

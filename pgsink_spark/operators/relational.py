@@ -2,9 +2,10 @@
 
 Each operator is a function ``(spark, sf_dir) -> DataFrame`` written in
 the DataFrame API (Catalyst optimizes: pushdown, pruning, join
-selection); ``ORACLES`` holds the equivalent DuckDB SQL over the same
-parquet fixtures. Column aliases match exactly on both sides — the
-driver's compare sorts columns by name before hashing.
+selection) and registers through ``registry.query`` with the equivalent
+DuckDB SQL over the same parquet fixtures. Column aliases match exactly
+on both sides — the driver's compare sorts columns by name before
+hashing.
 
 Determinism rules used throughout (SURVEY.md §2.E):
 - every LIMIT query carries a total ORDER BY (ties broken by a key);
@@ -20,34 +21,12 @@ Reference parity notes cite /root/reference file:line per operator.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from pgsink_spark.operators.registry import ORACLES, QUERIES, query  # noqa: F401 — QUERIES re-exported
 from pgsink_spark.sources.fixtures import load_table
-
-QueryFn = Callable[[SparkSession, str], DataFrame]
-
-QUERIES: dict[str, QueryFn] = {}
-ORACLES: dict[str, str] = {}
-# Queries kept only because SURVEY §2.E mandates their exact oracle
-# shape; each has a scale-correct twin that real pipelines should use
-# (d10's global running window → d43's keyed windows).
-SPEC_ONLY: set[str] = set()
-
-
-def query(name: str, oracle: str | None = None, spec_only: bool = False):
-    def deco(fn: QueryFn) -> QueryFn:
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        if spec_only:
-            SPEC_ONLY.add(name)
-        return fn
-
-    return deco
 
 
 def dec(c) -> Column:

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from pgsink_spark.operators.relational import query
+from pgsink_spark.operators.registry import query
 from pgsink_spark.sources.fixtures import load_table
 
 # BM25 free parameters (the universal Robertson/Sparck-Jones defaults)
@@ -668,7 +668,7 @@ def retrieval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ppl_buckets_sql() -> str:
-    from pgsink_spark.operators.relational import ORACLES
+    from pgsink_spark.operators.registry import ORACLES
 
     return f"""
     WITH base AS ({ORACLES["text_bigram_perplexity"]}),

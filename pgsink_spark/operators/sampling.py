@@ -19,7 +19,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from pgsink_spark.operators.relational import query
+from pgsink_spark.operators.registry import query
 from pgsink_spark.sources.fixtures import load_table
 
 

@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from pgsink_spark.operators.registry import query
 from pgsink_spark.sources.fixtures import load_table
 
 
@@ -158,6 +159,17 @@ def brute_force_topk_arrow(
     )
 
 
+@query(
+    "d20_similarity_topk",
+    """
+        SELECT b.vec_id FROM embeddings a
+        JOIN embeddings b ON a.vec_id = 1 AND b.vec_id <> 1
+        ORDER BY list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
+                                        CAST(b.embedding AS DOUBLE[])) DESC,
+                 b.vec_id
+        LIMIT 10
+    """,
+)
 def d20_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O-D20: top-10 nearest to vec_id=1 by cosine (exact baseline)."""
     emb = load_table(spark, sf_dir, "embeddings")
@@ -172,6 +184,21 @@ def d20_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(
+    "ann_bruteforce_topk",
+    """
+        SELECT q_id, vec_id, rnk FROM (
+          SELECT a.vec_id AS q_id, b.vec_id AS vec_id,
+                 ROW_NUMBER() OVER (
+                   PARTITION BY a.vec_id
+                   ORDER BY list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
+                                                   CAST(b.embedding AS DOUBLE[])) DESC,
+                            b.vec_id) AS rnk
+          FROM embeddings a JOIN embeddings b ON b.vec_id <> a.vec_id
+          WHERE a.vec_id < 5) t
+        WHERE rnk <= 5 ORDER BY q_id, rnk
+    """,
+)
 def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-5 neighbors for each of the first 5 vectors (multi-query
     fan-out: one corpus pass with map-side partial top-k for all
@@ -625,6 +652,16 @@ def _blocked_tile_pairs(
     )
 
 
+@query(
+    "dedup_embedding_pairs",
+    """
+        SELECT a.vec_id AS d1, b.vec_id AS d2
+        FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
+        WHERE list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
+                                     CAST(b.embedding AS DOUBLE[])) >= 0.4
+        ORDER BY d1, d2
+    """,
+)
 def dedup_embedding_pairs(
     spark: SparkSession, sf_dir: str, threshold: float = 0.4
 ) -> DataFrame:
@@ -813,37 +850,6 @@ def cosine_topk_pandas(
     )
 
 
-ORACLES: dict[str, str] = {
-    "d20_similarity_topk": """
-        SELECT b.vec_id FROM embeddings a
-        JOIN embeddings b ON a.vec_id = 1 AND b.vec_id <> 1
-        ORDER BY list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                                        CAST(b.embedding AS DOUBLE[])) DESC,
-                 b.vec_id
-        LIMIT 10
-    """,
-    "ann_bruteforce_topk": """
-        SELECT q_id, vec_id, rnk FROM (
-          SELECT a.vec_id AS q_id, b.vec_id AS vec_id,
-                 ROW_NUMBER() OVER (
-                   PARTITION BY a.vec_id
-                   ORDER BY list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                                                   CAST(b.embedding AS DOUBLE[])) DESC,
-                            b.vec_id) AS rnk
-          FROM embeddings a JOIN embeddings b ON b.vec_id <> a.vec_id
-          WHERE a.vec_id < 5) t
-        WHERE rnk <= 5 ORDER BY q_id, rnk
-    """,
-    "dedup_embedding_pairs": """
-        SELECT a.vec_id AS d1, b.vec_id AS d2
-        FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        WHERE list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                                     CAST(b.embedding AS DOUBLE[])) >= 0.4
-        ORDER BY d1, d2
-    """,
-}
-
-
 def ann_ivf_kmeans_topk(
     spark: SparkSession,
     sf_dir: str,
@@ -924,9 +930,6 @@ def ann_ivf_kmeans_topk(
         .select("q_id", "vec_id", "rnk")
         .orderBy("q_id", "rnk")
     )
-
-
-from pgsink_spark.operators.relational import query  # noqa: E402 — shared registry
 
 
 @query(

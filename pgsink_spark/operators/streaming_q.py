@@ -24,7 +24,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pgsink_spark.operators.relational import query
+from pgsink_spark.operators.registry import query
 from pgsink_spark.sources.fixtures import load_table
 from pgsink_spark.streaming.stateful import session_tracker
 

@@ -16,6 +16,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from pgsink_spark.operators.registry import query
 from pgsink_spark.sources.fixtures import load_table
 
 # marker stopwords per language, counted as ' tok ' substrings
@@ -33,6 +34,25 @@ def _substr_count(text: Column, sub: str) -> Column:
     ).cast("bigint")
 
 
+def _duck_count(sub: str) -> str:
+    pad = "concat(' ', lower(text), ' ')"
+    return (
+        f"CAST((len({pad}) - len(replace({pad}, ' {sub} ', ''))) / {len(sub) + 2}"
+        " AS BIGINT)"
+    )
+
+
+@query(
+    "text_lang_id",
+    f"""
+        SELECT doc_id,
+               CASE WHEN {_duck_count('le')} > {_duck_count('the')} THEN 'fr'
+                    WHEN {_duck_count('der')} > {_duck_count('the')} THEN 'de'
+                    WHEN {_duck_count('el')} > {_duck_count('the')} THEN 'es'
+                    ELSE 'en' END AS pred_lang
+        FROM documents ORDER BY doc_id
+    """,
+)
 def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Marker-frequency language ID. Deterministic decision chain:
     first language (fr→de→es order) whose padded-marker count strictly
@@ -53,6 +73,24 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select("doc_id", pred.alias("pred_lang")).orderBy("doc_id")
 
 
+@query(
+    "text_quality_score",
+    f"""
+        WITH feat AS (
+          SELECT doc_id,
+                 CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS n_words,
+                 {_duck_count('the')} AS n_stop,
+                 len(lower(text)) AS n_chars
+          FROM documents
+        )
+        SELECT doc_id, n_words, n_stop,
+               CAST(least(n_words / 100.0, 1.0) * 0.5
+                 + (1.0 - least(n_stop * 1.0 / n_words * 5.0, 1.0)) * 0.3
+                 + least((n_chars - (n_words - 1)) * 1.0 / n_words / 8.0, 1.0) * 0.2
+                 AS DOUBLE) AS quality
+        FROM feat ORDER BY doc_id
+    """,
+)
 def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality features + a composite score, all exact arithmetic:
     n_words, stop_ratio ('the' frequency), mean word length."""
@@ -78,6 +116,16 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
+@query(
+    "text_token_count",
+    f"""
+        SELECT doc_id,
+               CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS ws_tokens,
+               CAST(len(regexp_extract_all(lower(text), '{_TOKEN_REGEX}'))
+                    AS BIGINT) AS re_tokens
+        FROM documents ORDER BY doc_id
+    """,
+)
 def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace token count + BPE-ish regex segment count."""
     docs = load_table(spark, sf_dir, "documents")
@@ -91,6 +139,24 @@ def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
+@query(
+    "text_fingerprint",
+    """
+        WITH toks AS (
+          SELECT doc_id, string_split(lower(text), ' ') AS w FROM documents
+          WHERE len(string_split(lower(text), ' ')) >= 5
+        ), pos AS (
+          SELECT doc_id, w, unnest(range(1, len(w)-3)) AS i FROM toks
+        ), sh AS (
+          SELECT doc_id,
+                 w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' ' || w[i+3]
+                      || ' ' || w[i+4] AS shingle
+          FROM pos
+        )
+        SELECT doc_id, min(md5(shingle)) AS fp FROM sh
+        GROUP BY doc_id ORDER BY doc_id
+    """,
+)
 def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing-lite doc fingerprint: lexicographic min of md5 over
     word-5-gram shingles (shift-invariant to local edits).
@@ -125,6 +191,27 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 MODEL_W = (-1.0, 0.02, -3.0, 0.4)
 
 
+@query(
+    "quality_model_score",
+    f"""
+        WITH feat AS (
+          SELECT doc_id,
+                 CAST(len(string_split(lower(text), ' ')) AS DOUBLE) AS nw,
+                 CAST({_duck_count('the')} AS DOUBLE) AS ns,
+                 len(lower(text)) AS nc
+          FROM documents
+        ),
+        z AS (
+          SELECT doc_id,
+                 {MODEL_W[0]} + {MODEL_W[1]} * nw
+                   + {MODEL_W[2]} * (ns / nw)
+                   + {MODEL_W[3]} * ((nc - (nw - 1)) / nw) AS z
+          FROM feat
+        )
+        SELECT doc_id, CAST(z / (1.0 + abs(z)) AS DOUBLE) AS model_score
+        FROM z ORDER BY doc_id
+    """,
+)
 def quality_model_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Model-based quality scoring: batch inference over the corpus.
 
@@ -156,84 +243,6 @@ def quality_model_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         forward(n_words.cast("double"), ratio, mwl).alias("model_score"),
     ).orderBy("doc_id")
-
-
-def _duck_count(sub: str) -> str:
-    pad = "concat(' ', lower(text), ' ')"
-    return (
-        f"CAST((len({pad}) - len(replace({pad}, ' {sub} ', ''))) / {len(sub) + 2}"
-        " AS BIGINT)"
-    )
-
-
-ORACLES: dict[str, str] = {
-    "quality_model_score": f"""
-        WITH feat AS (
-          SELECT doc_id,
-                 CAST(len(string_split(lower(text), ' ')) AS DOUBLE) AS nw,
-                 CAST({_duck_count('the')} AS DOUBLE) AS ns,
-                 len(lower(text)) AS nc
-          FROM documents
-        ),
-        z AS (
-          SELECT doc_id,
-                 {MODEL_W[0]} + {MODEL_W[1]} * nw
-                   + {MODEL_W[2]} * (ns / nw)
-                   + {MODEL_W[3]} * ((nc - (nw - 1)) / nw) AS z
-          FROM feat
-        )
-        SELECT doc_id, CAST(z / (1.0 + abs(z)) AS DOUBLE) AS model_score
-        FROM z ORDER BY doc_id
-    """,
-    "text_lang_id": f"""
-        SELECT doc_id,
-               CASE WHEN {_duck_count('le')} > {_duck_count('the')} THEN 'fr'
-                    WHEN {_duck_count('der')} > {_duck_count('the')} THEN 'de'
-                    WHEN {_duck_count('el')} > {_duck_count('the')} THEN 'es'
-                    ELSE 'en' END AS pred_lang
-        FROM documents ORDER BY doc_id
-    """,
-    "text_quality_score": f"""
-        WITH feat AS (
-          SELECT doc_id,
-                 CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS n_words,
-                 {_duck_count('the')} AS n_stop,
-                 len(lower(text)) AS n_chars
-          FROM documents
-        )
-        SELECT doc_id, n_words, n_stop,
-               CAST(least(n_words / 100.0, 1.0) * 0.5
-                 + (1.0 - least(n_stop * 1.0 / n_words * 5.0, 1.0)) * 0.3
-                 + least((n_chars - (n_words - 1)) * 1.0 / n_words / 8.0, 1.0) * 0.2
-                 AS DOUBLE) AS quality
-        FROM feat ORDER BY doc_id
-    """,
-    "text_token_count": f"""
-        SELECT doc_id,
-               CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS ws_tokens,
-               CAST(len(regexp_extract_all(lower(text), '{_TOKEN_REGEX}'))
-                    AS BIGINT) AS re_tokens
-        FROM documents ORDER BY doc_id
-    """,
-    "text_fingerprint": """
-        WITH toks AS (
-          SELECT doc_id, string_split(lower(text), ' ') AS w FROM documents
-          WHERE len(string_split(lower(text), ' ')) >= 5
-        ), pos AS (
-          SELECT doc_id, w, unnest(range(1, len(w)-3)) AS i FROM toks
-        ), sh AS (
-          SELECT doc_id,
-                 w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' ' || w[i+3]
-                      || ' ' || w[i+4] AS shingle
-          FROM pos
-        )
-        SELECT doc_id, min(md5(shingle)) AS fp FROM sh
-        GROUP BY doc_id ORDER BY doc_id
-    """,
-}
-
-
-from pgsink_spark.operators.relational import query  # noqa: E402 — shared registry
 
 
 @query(

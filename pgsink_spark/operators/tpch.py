@@ -24,7 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from pgsink_spark.operators.relational import dec, load_table, query, rnd
+from pgsink_spark.operators.registry import query
+from pgsink_spark.operators.relational import dec, load_table, rnd
 
 
 @query(

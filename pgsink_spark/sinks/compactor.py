@@ -3,9 +3,10 @@ maintained batch-by-batch (the parquet-native MERGE).
 
 Reference parity: the BigQuery sink serves latest-row reads through a
 read-time view (pkg/sinks/bigquery/schema_builders.go:115-161); its
-docs leave materialization to the warehouse. ``WarehouseSink.compact``
-is the full-rewrite variant; this module is the *incremental* one —
-each envelope batch only touches the key-buckets it contains.
+docs leave materialization to the warehouse.
+``WarehouseSink.install_view`` is that read-time view; this module is
+the *incremental* materialization — each envelope batch only touches
+the key-buckets it contains.
 
 Layout and algorithm:
 

@@ -240,21 +240,6 @@ class WarehouseSink:
         got = obs.get
         return InsertResult(got["n"], got["max_lsn"])
 
-    def compact(self, namespace: str, name: str) -> str:
-        """Materialize the compaction view into a compacted table.
-
-        The periodic-compaction job: rewrites the table's live rows as
-        plain parquet so readers skip the window entirely. This is the
-        full-rewrite variant (correct at any scale but costs a full
-        pass); sinks/compactor.py's ``KeyedCompactedTable`` is the
-        incremental MERGE twin (bucket-pruned, foreachBatch-ready) —
-        readers are unchanged either way.
-        """
-        view = self.install_view(namespace, name)
-        path = os.path.join(self.root, f"{namespace}_{name}_compacted")
-        self.spark.table(view).write.mode("overwrite").parquet(path)
-        return path
-
     # ------------------------------------------------------------------
     # Snapshot manifests. Directory-listing reads (install_view) can
     # observe a concurrent insert's files before its commit — the

@@ -415,6 +415,9 @@ def test_ivf_probe_curve_fused_hits_match_pernprobe_reruns(spark, sf_dir):
     produce the same per-nprobe recall hits as independently rerunning
     ann_ivf_topk at each nprobe (the pre-r10 shape)."""
     exact = sim._exact_top5(spark, sf_dir).select("q_id", "vec_id")
+    # _ivf_curve_hits counts hits through a left join against this set,
+    # which counts each hit once only while (q_id, vec_id) is unique
+    assert exact.count() == exact.distinct().count()
     per_p = []
     for p in sim.IVF_CURVE_PROBES:
         ann = sim.ann_ivf_topk(spark, sf_dir, k=5, nprobe=p)

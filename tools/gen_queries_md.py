@@ -13,8 +13,9 @@ lines = [
     "",
     "Auto-generated (tools/gen_queries_md.py): every `queries()` entry, its",
     "implementing module, and its check form. The driver gate checks the",
-    "first 50 slots per round (VERIFICATION.md has the rotation ledger);",
-    "`tools/drivercheck.py` checks all of them every round.",
+    "first 50 slots per round. The order is derived from the",
+    "`CORRECTNESS_r*.json` ledger, stalest row first",
+    "(`registry.driver_order`); `tools/drivercheck.py` checks all of them.",
     "",
     "| # | query | module | check |",
     "|---|---|---|---|",

@@ -246,8 +246,8 @@ PROBES = [
     "d52_share_of_total",
     "d53_month_over_month",
     "d54_recursive_series",
-    # round-9 second sweep: the 14 rows heading _ROUND10_PRIORITY + the
-    # never-probed streaming block
+    # round-9 second sweep: the 14 rows that headed the round-10 driver
+    # window + the never-probed streaming block
     "d55_lateral_topn",
     "d56_time_range_frame",
     "d57_table_diff",
