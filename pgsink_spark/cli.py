@@ -149,31 +149,22 @@ def run_imports(
                         spark, os.path.join(root, "sink", "warehouse")
                     )
 
-                # the raw table is epoch-partitioned by the CDC stream,
-                # so import batches write under their own epoch range
-                # (1e9+) and ledger stream ("import") — same layout,
-                # disjoint partitions, independent exactly-once cursor
-                state = {"epoch": None}
-
+                # import batches are epochs of their own stream
+                # ("import"): disjoint `stream=import` partitions and an
+                # exactly-once cursor independent of the CDC stream's
                 def on_batch(env, payload, pk_cols, _job=job):
+                    ns, name = _job.schema, _job.table_name
                     warehouse.handle_schema(
-                        SchemaEntry(
-                            _job.schema, _job.table_name, payload,
-                            list(pk_cols),
-                        )
+                        SchemaEntry(ns, name, payload, list(pk_cols))
                     )
-                    if state["epoch"] is None:
-                        base = warehouse.committed_epoch(
-                            _job.schema, _job.table_name, "import"
-                        )
-                        state["epoch"] = (
-                            base + 1 if base is not None else 1_000_000_000
-                        )
+                    last = warehouse.committed_epoch(ns, name, "import")
+                    epoch = 0 if last is None else last + 1
                     warehouse.insert(
-                        env, _job.schema, _job.table_name,
-                        epoch=state["epoch"], stream_id="import",
+                        env, ns, name, epoch=epoch, stream_id="import"
                     )
-                    state["epoch"] += 1
+                    warehouse.commit_manifest(
+                        ns, name, epoch=epoch, stream_id="import"
+                    )
 
                 try:
                     with job_span(job) as _s:
@@ -284,8 +275,9 @@ def cmd_stream(args) -> int:
     ``--sink warehouse`` runs the full typed warehouse path: relation
     messages in the capture announce each table's schema (A7
     entry_from_relation), the generic map envelope is cast to the typed
-    payload (cast_envelope), and raw appends are exactly-once via the
-    epoch ledger (epoch = Spark batch id)."""
+    payload (cast_envelope), and each table's raw append is committed
+    exactly once by the snapshot-manifest publish that records its
+    epoch (epoch = Spark batch id)."""
     from pgsink_spark.session import get_spark
     from pgsink_spark.streaming.datasource import (
         CaptureIndex,
@@ -333,9 +325,9 @@ def cmd_stream(args) -> int:
         def sink(df, batch_id):
             # delivery is at-least-once into BigQuery; replayed batches
             # dedup best-effort via {lsn}-{sequence} insertIds (the
-            # warehouse sink's epoch ledger has no BQ analogue — the
-            # compaction VIEW is what guarantees read-side correctness,
-            # exactly the reference's posture)
+            # warehouse sink's epoch-in-manifest commit has no BQ
+            # analogue — the compaction VIEW is what guarantees
+            # read-side correctness, exactly the reference's posture)
             _fan_out(df, entries, bq.insert)
 
     elif getattr(args, "sink", "ndjson") == "warehouse":
@@ -347,11 +339,12 @@ def cmd_stream(args) -> int:
 
         def sink(df, batch_id):
             def write(typed, ns, name):
-                res = wh.insert(typed, ns, name, epoch=batch_id)
-                if res.count:
-                    # publish the committed snapshot so readers never
-                    # observe a mid-batch file set
-                    wh.commit_manifest(ns, name)
+                if wh.insert(typed, ns, name, epoch=batch_id).count:
+                    # the batch's one commit: publish the file set and
+                    # the epoch together, so readers never observe a
+                    # mid-batch file set and a crash before this line
+                    # replays the batch
+                    wh.commit_manifest(ns, name, epoch=batch_id)
 
             _fan_out(df, entries, write)
 
@@ -372,8 +365,8 @@ def cmd_stream(args) -> int:
     checkpoint = os.path.join(args.root, "checkpoints", "stream")
     # one query per tick: the reader caps each window at max_commits
     # and plans window after window by itself. Over an existing
-    # checkpoint Spark resumes from its offset log, so startlsn is
-    # only the pacing floor: the first window starts where the log ends
+    # checkpoint Spark resumes from its offset log, so startlsn (the
+    # last committed batch's end) is only the pacing floor
     reader = (
         spark.readStream.format("pgoutput")
         .option("path", args.capture)
@@ -523,35 +516,11 @@ def cmd_run(args) -> int:
     return 0
 
 
-def _connect_pg_params(host, port, db, user, password, ssl_mode):
-    """One connected ReplicationClient (TLS + SCRAM as needed)."""
-    import socket as _socket
-
-    from pgsink_spark.streaming.replication import ReplicationClient, start_tls
-
-    sock = _socket.create_connection((host, port), timeout=10)
-    if ssl_mode != "disable":
-        import ssl as _ssl
-
-        ctx = _ssl.create_default_context()
-        if os.environ.get("PGSINK_TEST_PG_SSL_NOVERIFY"):
-            ctx.check_hostname = False
-            ctx.verify_mode = _ssl.CERT_NONE
-        sock = start_tls(
-            sock, context=ctx, server_hostname=host,
-            required=(ssl_mode == "require"),
-        )
-    client = ReplicationClient(
-        sock, database=db, user=user, password=password,
-        heartbeat_interval_s=5.0,
-    )
-    client.connect()
-    return client
-
-
 def _connect_pg(args):
     """Client from the `run` command's --pg-* argument block."""
-    return _connect_pg_params(
+    from pgsink_spark.streaming.replication import dial
+
+    return dial(
         args.pg_host, args.pg_port, args.pg_db, args.pg_user,
         args.pg_password, args.pg_ssl,
     )
@@ -570,9 +539,10 @@ def cmd_capture(args) -> int:
         ensure_slot,
         sync_publication_tables,
     )
+    from pgsink_spark.streaming.replication import dial
 
     def connect():
-        return _connect_pg_params(
+        return dial(
             args.host, args.port, args.db, args.user, args.password,
             args.ssl,
         )

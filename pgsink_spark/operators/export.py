@@ -44,9 +44,9 @@ def write_sorted_shards(
 
 class StreamingShardExport:
     """foreachBatch shard appender: each micro-batch lands as
-    range-sharded, internally-sorted parquet under its own ``epoch=N``
-    partition, exactly-once via the same ledger/dynamic-overwrite
-    pattern as the warehouse raw tables.
+    range-sharded, internally-sorted parquet under its own
+    ``stream=S/epoch=N`` partition, exactly-once via an epoch ledger
+    over dynamic partition overwrite, like the warehouse raw tables.
 
     The resulting layout is the streaming curriculum shape: shards are
     globally sorted WITHIN an epoch and epochs concatenate in arrival
@@ -79,17 +79,17 @@ class StreamingShardExport:
 
         return os.path.join(self.path, "_epochs.json")
 
-    def committed_epoch(self) -> int | None:
+    def _streams(self) -> dict:
         import json
 
         try:
             with open(self._ledger()) as f:
-                data = json.load(f)
+                return json.load(f)["streams"]
         except (OSError, ValueError):
-            return None
-        if "streams" in data:
-            return data["streams"].get(self.stream_id)
-        return data.get("epoch") if self.stream_id == "default" else None
+            return {}
+
+    def committed_epoch(self) -> int | None:
+        return self._streams().get(self.stream_id)
 
     def apply_batch(self, df: DataFrame, epoch: int) -> int:
         import json
@@ -109,20 +109,14 @@ class StreamingShardExport:
                 self.shards_per_batch, *[F.col(c) for c in self.sort_cols]
             )
             .sortWithinPartitions(*self.sort_cols)
+            .withColumn("stream", F.lit(self.stream_id))
             .withColumn("epoch", F.lit(int(epoch)))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
+            .partitionBy("stream", "epoch")
             .parquet(self.path)
         )
-        try:
-            with open(self._ledger()) as f:
-                data = json.load(f)
-        except (OSError, ValueError):
-            data = {}
-        streams = data.get("streams", {})
-        if "epoch" in data and "default" not in streams:  # legacy upgrade
-            streams["default"] = data["epoch"]
+        streams = self._streams()
         streams[self.stream_id] = int(epoch)
         tmp = self._ledger() + ".tmp"
         with open(tmp, "w") as f:

@@ -22,10 +22,6 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
-# Queries kept only because SURVEY §2.E mandates their exact oracle
-# shape; each has a scale-correct twin that real pipelines should use
-# (d10's global running window → d43's keyed windows).
-SPEC_ONLY: set[str] = set()
 
 # Operator modules whose import registers queries, in registration order.
 OPERATOR_MODULES = (
@@ -51,15 +47,13 @@ OPERATOR_MODULES = (
 )
 
 
-def query(name: str, oracle: str | None = None, spec_only: bool = False):
+def query(name: str, oracle: str | None = None):
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             raise ValueError(f"query {name!r} is already registered")
         QUERIES[name] = fn
         if oracle is not None:
             ORACLES[name] = oracle
-        if spec_only:
-            SPEC_ONLY.add(name)
         return fn
 
     return deco

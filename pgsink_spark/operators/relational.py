@@ -895,14 +895,12 @@ def d9_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS DOUBLE) AS run
     FROM orders ORDER BY o_orderkey LIMIT 100
     """,
-    spec_only=True,
 )
 def d10_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame-spec running sum — SPEC-ONLY (SPEC_ONLY registry): an
-    unpartitioned running window is a single-task operator by
-    definition; kept to the SURVEY §2.E oracle shape. The scale-correct
-    twin is ``d43_keyed_running_sum`` (per-key windows, fully
-    parallel)."""
+    """Frame-spec running sum — SPEC-ONLY: an unpartitioned running
+    window is a single-task operator by definition; kept to the SURVEY
+    §2.E oracle shape. The scale-correct twin is
+    ``d43_keyed_running_sum`` (per-key windows, fully parallel)."""
     orders = load_table(spark, sf_dir, "orders")
     w = (
         W.orderBy("o_orderkey").rowsBetween(W.unboundedPreceding, W.currentRow)

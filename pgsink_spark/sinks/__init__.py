@@ -10,7 +10,7 @@ compaction view, exactly like the reference's BigQuery sink
 (pkg/sinks/bigquery/schema_builders.go:115-161).
 """
 
-from pgsink_spark.sinks.generic import InsertResult, write_batch
+from pgsink_spark.sinks.generic import InsertResult
 from pgsink_spark.sinks.instrumented import (
     InstrumentedInserter,
     SinkMetrics,
@@ -35,5 +35,4 @@ __all__ = [
     "JdbcWarehouseSink",
     "WarehouseSink",
     "compaction_view_sql",
-    "write_batch",
 ]

@@ -11,10 +11,11 @@ Reference parity map:
   (pkg/sinks/generic/schema_handler.go:61-105): a repeated fingerprint is
   a no-op, a new one triggers the sink's ``sync`` callback exactly once.
 - Routing — the reference hash-routes modifications to per-table
-  inserters (pkg/sinks/generic/router.go:43-115); Spark expresses the
-  same thing as ``write.partitionBy("namespace", "name")`` — one shuffle-
-  free write fans out every table in the batch (dynamic partition
-  overwrite keeps it incremental at 100 TB; no per-table driver loop).
+  inserters (pkg/sinks/generic/router.go:43-115). The generic NDJSON
+  stream sink writes ``partitionBy("namespace", "name")``, one write
+  for every table in the batch; the typed sinks (warehouse, BigQuery)
+  need one payload schema per write, so ``cli._fan_out`` loops over
+  the batch's tables on the driver and writes each table's slice.
 
 Scale note: accounting runs on the *batch being written*, so it adds one
 cheap aggregation, not a second scan of the source; at 1000 executors
@@ -44,25 +45,12 @@ class InsertResult:
         return InsertResult(self.count + other.count, max(lsns) if lsns else None)
 
 
-EMPTY_RESULT = InsertResult(0, None)
-
-
 def batch_result(env: DataFrame) -> InsertResult:
     """Compute (count, max lsn) for a batch — the ack watermark."""
     row = env.agg(
         F.count(F.lit(1)).alias("n"), F.max("lsn").alias("max_lsn")
     ).collect()[0]
     return InsertResult(row["n"], row["max_lsn"])
-
-
-def write_batch(
-    env: DataFrame,
-    writer: Callable[[DataFrame], None],
-    account: bool = True,
-) -> InsertResult:
-    """Write one envelope batch through ``writer`` and account it."""
-    writer(env)
-    return batch_result(env) if account else EMPTY_RESULT
 
 
 class SchemaHandler:

@@ -7,9 +7,9 @@ queries/flushes (pkg/imports/importer.go:57-81).
 
 Spark-first shape: batch facts (row count, max LSN) come from
 ``DataFrame.observe`` + ``Observation`` — collected *during the write
-job itself*, so accounting costs zero extra scans (the un-instrumented
-``write_batch`` pays a second aggregation pass). Durations are wall
-clock around the write action, same as the reference's timer.
+job itself*, so accounting costs zero extra scans (``batch_result``
+pays a second aggregation pass). Durations are wall clock around the
+write action, same as the reference's timer.
 """
 
 from __future__ import annotations

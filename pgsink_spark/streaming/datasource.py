@@ -240,6 +240,8 @@ class PgoutputStreamReader(DataSourceStreamReader):
                 f"{start['lsn']}: a reader over an existing checkpoint "
                 "needs startlsn=resume_lsn(checkpoint)"
             )
+        # a re-run batch is planned before any latestOffset call
+        self._paced_to = max(self._paced_to, end["lsn"])
         # WAL total order is DATA — (lsn, sequence) on every row — not
         # partition order: sinks elect rows by that key at read time,
         # so a batch may decode in parallel. The commit index lets us
@@ -402,10 +404,12 @@ def _logged_end(checkpoint: str, log: str) -> int | None:
 
 def resume_lsn(checkpoint: str) -> int:
     """Where a query over ``checkpoint`` resumes: the end offset of the
-    last logged batch (Spark re-runs it first if it never committed),
-    0 for a new checkpoint. Pass it as ``startlsn`` so a paced reader
-    plans its first window from there."""
-    return _logged_end(checkpoint, "offsets") or 0
+    last committed batch, 0 before the first commit. Pass it as
+    ``startlsn`` so a paced reader plans its first new window from
+    there. A logged batch that never committed is re-run first over its
+    logged range (from the initial offset if it is batch 0), and
+    ``partitions`` raises the floor to that range's end."""
+    return _logged_end(checkpoint, "commits") or 0
 
 
 def confirm_committed(path: str, checkpoint: str) -> None:

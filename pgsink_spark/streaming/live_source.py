@@ -43,38 +43,7 @@ from pgsink_spark.streaming.datasource import (
     GENERIC_ENVELOPE,
     PgoutputStreamReader,
 )
-
-
-def _connect_from_options(opts: dict):
-    import os
-    import socket as _socket
-
-    from pgsink_spark.streaming.replication import ReplicationClient, start_tls
-
-    host = opts["pghost"]
-    port = int(opts.get("pgport", "5432"))
-    ssl_mode = opts.get("pgssl", "prefer")
-    sock = _socket.create_connection((host, port), timeout=10)
-    if ssl_mode != "disable":
-        import ssl as _ssl
-
-        ctx = _ssl.create_default_context()
-        if os.environ.get("PGSINK_TEST_PG_SSL_NOVERIFY"):
-            ctx.check_hostname = False
-            ctx.verify_mode = _ssl.CERT_NONE
-        sock = start_tls(
-            sock, context=ctx, server_hostname=host,
-            required=(ssl_mode == "require"),
-        )
-    client = ReplicationClient(
-        sock,
-        database=opts.get("pgdb", "postgres"),
-        user=opts.get("pguser", "postgres"),
-        password=opts.get("pgpassword"),
-        heartbeat_interval_s=5.0,
-    )
-    client.connect()
-    return client
+from pgsink_spark.streaming.replication import dial
 
 
 class PgoutputLiveStreamReader(PgoutputStreamReader):
@@ -85,16 +54,15 @@ class PgoutputLiveStreamReader(PgoutputStreamReader):
         self._opts = dict(options)
         self._provisioned = False
 
-    def _dbg(self, msg: str) -> None:
-        import os
-
-        path = os.environ.get("PGSINK_LIVE_SOURCE_DEBUG")
-        if path:
-            with open(path, "a") as f:
-                f.write(f"pid={os.getpid()} {msg}\n")
+    def _connect(self):
+        o = self._opts
+        return dial(
+            o["pghost"], int(o.get("pgport", "5432")),
+            o.get("pgdb", "postgres"), o.get("pguser", "postgres"),
+            o.get("pgpassword"), o.get("pgssl", "prefer"),
+        )
 
     def _drain(self) -> None:
-        self._dbg("drain start")
         from pgsink_spark.streaming.live import (
             capture_with_retry,
             ensure_publication,
@@ -105,7 +73,7 @@ class PgoutputLiveStreamReader(PgoutputStreamReader):
         slot = self._opts["slot"]
         publication = self._opts["publication"]
         if not self._provisioned:
-            client = _connect_from_options(self._opts)
+            client = self._connect()
             try:
                 ensure_publication(client, publication)
                 tables = self._opts.get("tables")
@@ -117,23 +85,16 @@ class PgoutputLiveStreamReader(PgoutputStreamReader):
                     }
                     sync_publication_tables(client, publication, desired)
                 ensure_slot(client, slot)
-                from pgsink_spark.streaming.live import publication_tables
-
-                self._dbg(
-                    f"provisioned pub={publication} "
-                    f"members={publication_tables(client, publication)}"
-                )
             finally:
                 client.close()
             self._provisioned = True
-        report = capture_with_retry(
-            lambda: _connect_from_options(self._opts),
+        capture_with_retry(
+            self._connect,
             slot,
             publication,
             self.path,
             max_reconnects=3,
         )
-        self._dbg(f"drain done: {report}")
 
     def initialOffset(self) -> dict:
         self._drain()  # the spool may not exist before the first drain

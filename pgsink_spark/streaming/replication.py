@@ -402,6 +402,37 @@ class ReplicationClient:
         self.status_updates_sent += 1
 
 
+def dial(
+    host: str,
+    port: int,
+    database: str,
+    user: str,
+    password: str | None,
+    ssl_mode: str,
+) -> ReplicationClient:
+    """One connected ReplicationClient, TLS + SCRAM as needed
+    (``ssl_mode`` is libpq's disable / prefer / require)."""
+    import os
+    import socket
+
+    sock = socket.create_connection((host, port), timeout=10)
+    if ssl_mode != "disable":
+        ctx = _ssl.create_default_context()
+        if os.environ.get("PGSINK_TEST_PG_SSL_NOVERIFY"):
+            ctx.check_hostname = False
+            ctx.verify_mode = _ssl.CERT_NONE
+        sock = start_tls(
+            sock, context=ctx, server_hostname=host,
+            required=(ssl_mode == "require"),
+        )
+    client = ReplicationClient(
+        sock, database=database, user=user, password=password,
+        heartbeat_interval_s=5.0,
+    )
+    client.connect()
+    return client
+
+
 def live_wire(client: ReplicationClient) -> Iterator[bytes]:
     """Adapt the CopyBoth loop to the Subscription's wire contract.
 

@@ -240,7 +240,7 @@ def test_cli_stream_run_warehouse_sink(tmp_path, spark, capsys):
     schema, envelopes land typed in the raw table (exactly-once
     epochs), and the installed compaction view serves the logical
     state. Re-running the same command redelivers nothing (checkpoint)
-    and re-appends nothing (epoch ledger)."""
+    and re-appends nothing (published epochs)."""
     import datetime
     from datetime import timezone
 
@@ -299,7 +299,7 @@ def test_cli_stream_run_warehouse_sink(tmp_path, spark, capsys):
     got = {(r["id"], r["v"]) for r in spark.table(view).collect()}
     assert got == {(1, "a2")}
 
-    # idempotent re-run: checkpoint + epoch ledger → still 4 raw rows
+    # idempotent re-run: checkpoint + published epochs → still 4 raw rows
     assert main(argv) == 0
     assert spark.read.parquet(raw_path).count() == 4
 
@@ -395,10 +395,11 @@ def test_cli_run_one_tick(tmp_path, spark, capsys):
 @pytest.mark.slow
 def test_cli_stream_bounded_batches(tmp_path, spark, capsys):
     """--max-commits 1: the backlog drains fully, one commit per
-    micro-batch (epoch ledger shows multiple epochs)."""
+    micro-batch (the manifest's committed epoch shows multiple epochs)."""
     import datetime as _dt
-    import json as _json
     from datetime import timezone as _tz
+
+    from pgsink_spark.sinks.warehouse import WarehouseSink
 
     from pgsink_spark.streaming.datasource import append_capture
     from pgsink_spark.streaming.decoder import (
@@ -430,10 +431,9 @@ def test_cli_stream_bounded_batches(tmp_path, spark, capsys):
                  "--sink", "warehouse", "--max-commits", "1"]) == 0
     raw_path = os.path.join(root, "sink", "warehouse", "public_kv_raw")
     assert spark.read.parquet(raw_path).count() == 3
-    ledger = _json.load(open(os.path.join(raw_path, "_epochs.json")))
-    # stream-scoped ledger (round-4): the run's single stream committed
-    # three bounded batches, not one
-    assert max(ledger["streams"].values()) >= 2
+    wh = WarehouseSink(spark, os.path.join(root, "sink", "warehouse"))
+    # the run's single stream committed three bounded batches, not one
+    assert wh.committed_epoch("public", "kv") >= 2
 
 
 def test_cli_warehouse_stream_publishes_snapshots(tmp_path, spark):

@@ -169,7 +169,7 @@ def test_streaming_source_e2e_with_restart(spark, tmp_path):
     # restart from the checkpoint: at-least-once — a stop() landing
     # between the offset-log and commit-log writes legitimately
     # re-executes the LAST batch (foreachBatch's documented contract;
-    # the warehouse sink's epoch ledger is what upgrades this to
+    # the warehouse sink's published epochs are what upgrade this to
     # exactly-once). So: the new transaction must flow, nothing from
     # the fully-committed prefix may reappear, and at most the final
     # pre-stop batch (lsn 300) may be redelivered.

@@ -10,11 +10,13 @@ must KEEP the known driver equivalence of DATE vs midnight TIMESTAMP
 (d14/d30 passed round 1 with Spark DATE against DuckDB datetime64[us]).
 """
 
+import os
 import sys
 
 import pandas as pd
 
-sys.path.insert(0, "/root/repo/tools")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(REPO, "tools"))
 
 from drivercheck import _canon, _hashable  # noqa: E402
 

@@ -274,6 +274,8 @@ def test_e2e_dsv2_stream_to_warehouse_with_restart(spark, tmp_path):
         res = sink.insert(env, "public", "kv", epoch=batch_id)
         # max-LSN-per-batch is the ack the DSv2 `commit` then persists
         assert res.count == 0 or res.max_lsn is not None
+        if res.count:
+            sink.commit_manifest("public", "kv", epoch=batch_id)
 
     def run_until_drained(expected_raw_rows, timeout_s=90.0):
         q = (

@@ -83,7 +83,7 @@ def test_streaming_shard_export_epochs(spark, tmp_path):
 
     import pyarrow.parquet as pq
 
-    e0 = os.path.join(str(tmp_path / "shards"), "epoch=0")
+    e0 = os.path.join(str(tmp_path / "shards"), "stream=default", "epoch=0")
     ranges = []
     for f in sorted(os.listdir(e0)):
         if f.endswith(".parquet"):

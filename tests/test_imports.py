@@ -7,6 +7,8 @@ Mirrors the reference's import tests: batch/cursor behavior
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -277,10 +279,10 @@ def test_two_os_processes_never_double_claim(tmp_path):
     worker_src = textwrap.dedent(
         """
         import json, sys
-        sys.path.insert(0, "/root/repo")
+        path, owner, out, repo = sys.argv[1:5]
+        sys.path.insert(0, repo)
         from pgsink_spark.imports.jobs import ImportJobStore
 
-        path, owner, out = sys.argv[1:4]
         store = ImportJobStore(path, owner=owner)
         got = []
         while (j := store.claim()) is not None:
@@ -291,10 +293,11 @@ def test_two_os_processes_never_double_claim(tmp_path):
     )
     script = tmp_path / "worker.py"
     script.write_text(worker_src)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     outs = [str(tmp_path / "a.json"), str(tmp_path / "b.json")]
     procs = [
         subprocess.Popen(
-            [sys.executable, str(script), path, f"driver-{k}", out],
+            [sys.executable, str(script), path, f"driver-{k}", out, repo],
             cwd="/",
         )
         for k, out in zip("ab", outs)

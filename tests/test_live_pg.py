@@ -982,7 +982,10 @@ class TestLiveRunTick:
         import os as _os
 
         from pgsink_spark.cli import main
-        from pgsink_spark.sinks.warehouse import compaction_view_sql
+        from pgsink_spark.sinks.warehouse import (
+            WarehouseSink,
+            compaction_view_sql,
+        )
 
         run = uuid.uuid4().hex[:8]
         table = f"pgsink_tick_{run}"
@@ -1010,6 +1013,15 @@ class TestLiveRunTick:
             # tick 1: infra converges AND the live keyset backfill
             # imports the pre-slot rows over the walsender channel
             assert main(argv) == 0
+            # the import's batches are published: snapshot readers see them
+            wh = WarehouseSink(
+                spark, _os.path.join(root, "sink", "warehouse")
+            )
+            assert wh.committed_epoch("public", table, "import") == 0
+            assert sorted(
+                r["payload"]["id"]
+                for r in wh.read_snapshot("public", table).collect()
+            ) == [10, 11]
             admin._simple_query(
                 f"INSERT INTO {table} VALUES (1, 'a'), (2, 'b')"
             )
@@ -1039,6 +1051,16 @@ class TestLiveRunTick:
                 == [(int(i), v) for i, v in live_rows]
                 == [(2, "b"), (10, "pre-upd"), (11, "pre2")]
             )
+            # the published snapshot serves the same state
+            wh.read_snapshot("public", table).createOrReplaceTempView(
+                "tick_snap_raw"
+            )
+            spark.sql(
+                compaction_view_sql("tick_snap", "tick_snap_raw", ["id"])
+            )
+            assert sorted(
+                (r["id"], r["v"]) for r in spark.table("tick_snap").collect()
+            ) == got
         finally:
             try:
                 cleanup = _connect_replication(pg)
@@ -1413,13 +1435,16 @@ class TestLiveStreamToWarehouse:
             part = df.where(
                 (df["namespace"] == e.namespace) & (df["name"] == e.name)
             )
-            wh.insert(
+            if wh.insert(
                 cast_envelope(part, e.payload),
                 e.namespace,
                 e.name,
                 epoch=batch_id,
                 stream_id="live-ws",
-            )
+            ).count:
+                wh.commit_manifest(
+                    e.namespace, e.name, epoch=batch_id, stream_id="live-ws"
+                )
 
         def wait_for(cond, timeout_s=120.0):
             deadline = _time.time() + timeout_s

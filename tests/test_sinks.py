@@ -61,6 +61,28 @@ def test_batch_result_is_ack_watermark(spark):
     assert batch_result(env) == InsertResult(3, 9)
 
 
+def test_envelope_batches_account_correctly(spark):
+    """Accounting folds equal direct aggregation over the same rows."""
+    from pgsink_spark.streaming.marshal import Modification
+    from pgsink_spark.streaming.stream import modifications_df
+
+    mods = [
+        Modification(
+            timestamp=datetime.datetime(2024, 6, 1, 0, 0, i),
+            namespace="public",
+            name="kv",
+            lsn=100 + i,
+            sequence=1,
+            before=None,
+            after={"id": i, "v": "x"},
+        )
+        for i in range(5)
+    ]
+    env = modifications_df(spark, mods, PAYLOAD)
+    res = batch_result(env)
+    assert res.count == 5 and res.max_lsn == 104
+
+
 def test_schema_handler_idempotent_by_fingerprint():
     calls = []
     h = SchemaHandler(lambda e: calls.append(e.fingerprint))
@@ -311,6 +333,8 @@ def test_warehouse_replayed_epoch_is_skipped(spark, tmp_path):
     )
     r1 = sink.insert(batch, "public", "example", epoch=0)
     assert r1 == InsertResult(2, 11)
+    assert sink.committed_epoch("public", "example") is None  # unpublished
+    sink.commit_manifest("public", "example", epoch=0)
     assert sink.committed_epoch("public", "example") == 0
 
     # at-least-once delivery replays epoch 0 → skipped outright
@@ -326,15 +350,17 @@ def test_warehouse_replayed_epoch_is_skipped(spark, tmp_path):
     batch2 = _env_rows(spark, [(20, None, {"id": 3, "v": "c"})])
     r3 = sink.insert(batch2, "public", "example", epoch=1)
     assert r3 == InsertResult(1, 20)
+    sink.commit_manifest("public", "example", epoch=1)
+    assert sink.committed_epoch("public", "example") == 1
+    # a republish without an epoch (expire_raw's) carries it forward
+    sink.commit_manifest("public", "example")
     assert sink.committed_epoch("public", "example") == 1
 
 
 def test_warehouse_half_written_epoch_replay_is_idempotent(spark, tmp_path):
-    """Crash after the parquet write but before the ledger commit: the
-    replay dynamically overwrites the epoch's own partitions, so rows
-    never double."""
-    import os as _os
-
+    """Insert without publish — a crash after the parquet write but
+    before the manifest commit: the replay dynamically overwrites the
+    epoch's own partitions, so rows never double."""
     sink = WarehouseSink(spark, str(tmp_path / "wh"))
     sink.handle_schema(SchemaEntry("public", "example", PAYLOAD, ["id"]))
     batch = _env_rows(
@@ -342,16 +368,16 @@ def test_warehouse_half_written_epoch_replay_is_idempotent(spark, tmp_path):
         [(10, None, {"id": 1, "v": "a"}), (11, None, {"id": 2, "v": "b"})],
     )
     sink.insert(batch, "public", "example", epoch=0)
-    # simulate the crash window: files are on disk, ledger is not
-    _os.remove(sink._epochs_path("public", "example"))
+    # the crash window: files are on disk, no manifest names the epoch
     assert sink.committed_epoch("public", "example") is None
 
     r = sink.insert(batch, "public", "example", epoch=0)
     assert r == InsertResult(2, 11)  # rewrites, and re-accounts, epoch 0
+    sink.commit_manifest("public", "example", epoch=0)
 
     raw = spark.read.parquet(str(tmp_path / "wh" / "public_example_raw"))
     assert raw.count() == 2  # not 4: overwrite, not append
-    view = sink.install_view("public", "example")
+    view = sink.install_view("public", "example", snapshot=True)
     assert {x.id for x in spark.table(view).collect()} == {1, 2}
 
 
@@ -468,18 +494,34 @@ def test_snapshot_backed_view(spark, tmp_path):
 def test_warehouse_epoch_ledger_is_stream_scoped(spark, tmp_path):
     """A rebuilt checkpoint restarts batch ids at 0 under a NEW stream
     id — the old stream's high-water mark must not silently skip its
-    batches (round-3 advice: that was silent data loss)."""
+    batches (round-3 advice: that was silent data loss), and when the
+    new stream reaches the old one's epoch number its write must not
+    overwrite the old stream's partitions."""
     sink = WarehouseSink(spark, str(tmp_path / "wh"))
     sink.handle_schema(SchemaEntry("public", "example", PAYLOAD, ["id"]))
-    b1 = _env_rows(spark, [(10, None, {"id": 1, "v": "a"})])
-    sink.insert(b1, "public", "example", epoch=3, stream_id="q1")
+
+    def write(rows, epoch, stream_id):
+        res = sink.insert(_env_rows(spark, rows), "public", "example",
+                          epoch=epoch, stream_id=stream_id)
+        sink.commit_manifest("public", "example", epoch=epoch,
+                             stream_id=stream_id)
+        return res
+
+    write([(10, None, {"id": 1, "v": "a"})], 3, "q1")
     assert sink.committed_epoch("public", "example", "q1") == 3
     # fresh checkpoint (new stream id) starts at epoch 0 and WRITES
-    b2 = _env_rows(spark, [(20, None, {"id": 2, "v": "b"})])
-    r = sink.insert(b2, "public", "example", epoch=0, stream_id="q2")
+    r = write([(20, None, {"id": 2, "v": "b"})], 0, "q2")
     assert r == InsertResult(1, 20)
     assert sink.committed_epoch("public", "example", "q2") == 0
     assert sink.committed_epoch("public", "example", "q1") == 3
+    # ...and reaches q1's epoch on the same day without touching q1's rows
+    r = write([(30, None, {"id": 3, "v": "c"})], 3, "q2")
+    assert r == InsertResult(1, 30)
+    assert sink.committed_epoch("public", "example", "q2") == 3
+    raw = spark.read.parquet(str(tmp_path / "wh" / "public_example_raw"))
+    assert sorted(r.lsn for r in raw.collect()) == [10, 20, 30]
+    view = sink.install_view("public", "example", snapshot=True)
+    assert {r.id for r in spark.table(view).collect()} == {1, 2, 3}
 
 
 def test_warehouse_epoch_regression_fails_loudly(spark, tmp_path):
@@ -491,6 +533,7 @@ def test_warehouse_epoch_regression_fails_loudly(spark, tmp_path):
     sink.handle_schema(SchemaEntry("public", "example", PAYLOAD, ["id"]))
     b = _env_rows(spark, [(10, None, {"id": 1, "v": "a"})])
     sink.insert(b, "public", "example", epoch=2)
+    sink.commit_manifest("public", "example", epoch=2)
     # replay of the committed epoch is the legal crash-recovery case
     assert sink.insert(b, "public", "example", epoch=2) == InsertResult(0, None)
     with _pytest.raises(RuntimeError, match="epoch regression"):
@@ -544,6 +587,9 @@ def test_shard_export_ledger_is_stream_scoped(spark, tmp_path):
     assert ex2.committed_epoch() is None
     assert ex2.apply_batch(df, 0) == 1
     assert ex1.committed_epoch() == 4
+    # q2 reaching q1's epoch writes its own partition, not over q1's
+    assert ex2.apply_batch(df, 4) == 1
+    assert ex1.read().count() == 6
 
 
 def test_expire_manifests_keep_and_broken(spark, tmp_path):

@@ -1,14 +1,17 @@
 """`stream run --sink warehouse` end to end on small captures: a bounded
 drain reads each row from the source once, starts one query whatever
 the window size (also when it resumes an existing checkpoint), confirms
-the capture's last commit, and bytea and array columns land exactly as
-they were committed."""
+the capture's last commit, reruns exactly-once after a crash at a sink
+commit boundary, and bytea and array columns land exactly as they were
+committed."""
 
 from __future__ import annotations
 
 import datetime
 import os
 import time
+
+import pytest
 
 from pgsink_spark.changelog.registry import entry_from_relation
 from pgsink_spark.cli import main
@@ -170,6 +173,96 @@ def test_rerun_resumes_paced_from_checkpoint(tmp_path, spark):
     for r in rels:
         assert spark.read.parquet(os.path.join(
             root, "sink", "warehouse", f"public_{r.name}_raw")).count() == 8
+    assert OffsetStore(cap + ".confirmed").confirmed_lsn == lsns[-1]
+
+
+def _three_table_capture(cap: str) -> tuple[list, dict, list]:
+    """5 commits over t0, t1, t2: t0 only in the first two, so at
+    --max-commits 2 the first batch is the last one that writes it.
+    Returns (relations, {table: [(lsn, id, v or None for a delete)]},
+    commit LSNs)."""
+    rels = [_rel(16440 + i, f"t{i}", ("v", TEXT)) for i in range(3)]
+    t0, t1, t2 = (r.oid for r in rels)
+    commits = [
+        (100, [("I", t0, 1, "a"), ("I", t0, 2, "b"), ("I", t1, 1, "a"),
+               ("I", t2, 1, "a")]),
+        (200, [("U", t0, 1, "a2"), ("D", t0, 2, "b"), ("I", t1, 2, "b"),
+               ("I", t2, 2, "b")]),
+        (300, [("I", t1, 3, "c"), ("U", t1, 1, "a3"), ("I", t2, 3, "c")]),
+        (400, [("D", t2, 1, "a"), ("I", t1, 4, "d"), ("I", t2, 4, "d")]),
+        (500, [("U", t1, 2, "b5"), ("I", t2, 5, "e")]),
+    ]
+    encode = {
+        "I": lambda oid, row: encode_insert(oid, row),
+        "U": lambda oid, row: encode_update(oid, row),
+        "D": lambda oid, row: encode_delete(oid, old=row),
+    }
+    names = {r.oid: r.name for r in rels}
+    frames, changes = [], {r.name: [] for r in rels}
+    for i, (lsn, ops) in enumerate(commits):
+        msgs = [encode_relation(r) for r in rels] if i == 0 else []
+        for op, oid, k, v in ops:
+            msgs.append(encode[op](oid, (str(k).encode(), v.encode())))
+            changes[names[oid]].append((lsn, k, None if op == "D" else v))
+        frames += _txn(lsn, *msgs)
+    append_capture(cap, frames)
+    return rels, changes, [lsn for lsn, _ in commits]
+
+
+# fault point → (WarehouseSink method, the call that raises, its table)
+FAULTS = {
+    # table 2 of 3 in the first batch, after table 1 was published
+    "insert_table_2_of_3": ("insert", 2, "t1"),
+    # the first publish, after table 1's files are written
+    "commit_manifest_first_call": ("commit_manifest", 1, "t0"),
+}
+
+
+@pytest.mark.parametrize("fault", sorted(FAULTS))
+def test_crash_at_sink_commit_boundary_reruns_exactly_once(
+    tmp_path, spark, monkeypatch, fault
+):
+    """A `stream run` that raises at a sink commit boundary, rerun to
+    completion: every change is in raw storage exactly once, the
+    published snapshot's view equals the fold of the capture, and the
+    source confirms the last commit."""
+    cap = str(tmp_path / "wal.capture")
+    rels, changes, lsns = _three_table_capture(cap)
+    root = str(tmp_path / "state")
+
+    method, nth, table = FAULTS[fault]
+    real = getattr(WarehouseSink, method)
+    calls = []
+
+    def faulty(self, *args, **kwargs):
+        # insert(env, ns, name, ...) / commit_manifest(ns, name, ...)
+        calls.append(args[2] if method == "insert" else args[1])
+        if len(calls) == nth:
+            raise RuntimeError(f"injected fault in {method}")
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(WarehouseSink, method, faulty)
+    with pytest.raises(Exception, match="injected fault"):
+        _stream(root, cap, "--max-commits", "2")
+    assert calls[nth - 1] == table
+    monkeypatch.undo()
+    _stream(root, cap, "--max-commits", "2")
+
+    wh = WarehouseSink(spark, os.path.join(root, "sink", "warehouse"))
+    for rel in rels:
+        wh.handle_schema(entry_from_relation(rel))
+        raw = spark.read.parquet(os.path.join(
+            root, "sink", "warehouse", f"public_{rel.name}_raw")).collect()
+        keys = [(r["lsn"], r["sequence"]) for r in raw]
+        assert len(keys) == len(set(keys)) == len(changes[rel.name])
+        assert sorted(lsn for lsn, _ in keys) == sorted(
+            lsn for lsn, _, _ in changes[rel.name])
+        fold = {}
+        for _, k, v in changes[rel.name]:
+            fold[k] = v
+        view = wh.install_view(rel.namespace, rel.name, snapshot=True)
+        assert {r["id"]: r["v"] for r in spark.table(view).collect()} == {
+            k: v for k, v in fold.items() if v is not None}
     assert OffsetStore(cap + ".confirmed").confirmed_lsn == lsns[-1]
 
 

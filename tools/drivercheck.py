@@ -14,13 +14,14 @@ Usage: python tools/drivercheck.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pgsink_spark.session import get_spark
 from pgsink_spark.sources.fixtures import TABLES

@@ -9,9 +9,10 @@ Run: python tools/gen_plans_md.py
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pgsink_spark.plans import (  # noqa: E402
     broadcast_join_count,

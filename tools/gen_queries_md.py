@@ -1,8 +1,9 @@
 """Regenerate QUERIES.md (registry index) — run after adding queries."""
 import inspect
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as em
 

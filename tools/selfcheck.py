@@ -8,6 +8,7 @@ Usage: python tools/selfcheck.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 from datetime import date, datetime
@@ -15,7 +16,7 @@ from decimal import Decimal
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pgsink_spark.session import get_spark
 from pgsink_spark.sources.fixtures import TABLES
