@@ -7,12 +7,15 @@ keyset pagination over the PK index, never OFFSET (README.md:31-33).
 
 Two Spark shapes, used together:
 
-- ``keyset_batch`` — the *resumable driver loop* step: one bounded batch
-  per call. Catalyst pushes ``pk > cursor`` into the source scan
-  (JDBC pushdown / parquet min-max skipping), so each batch reads only
-  the tail it needs, exactly like the reference's index traversal. This
-  is the shape that keeps source transactions short (snapshot-timeout
-  semantics) and survives restarts.
+- ``keyset_batch`` — the *resumable driver loop* step: one bounded,
+  lazy page per call. Catalyst pushes ``pk > cursor`` into the source
+  scan (JDBC pushdown / parquet min-max skipping), so each page reads
+  only the tail it needs, exactly like the reference's index traversal.
+  The page's next cursor and row count are observed by the same
+  execution that writes it, so a page costs one Spark job, as the
+  reference's page costs one query. This is the shape that keeps source
+  transactions short (snapshot-timeout semantics) and survives
+  restarts.
 - ``partitioned_snapshot`` — the *parallel bulk* step: Spark's native
   range-partitioned read (JDBC ``partitionColumn/lowerBound/upperBound/
   numPartitions``) for the initial fill, when resumability matters less
@@ -22,8 +25,16 @@ Two Spark shapes, used together:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import time
+from dataclasses import dataclass
+
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+
+# how long a page's observation may take to arrive after the action that
+# ran the page returned; Spark reports it from its listener bus, which is
+# normally milliseconds behind
+OBSERVE_TIMEOUT_S = 10.0
 
 
 def _pk_list(pk) -> list[str]:
@@ -51,56 +62,71 @@ def row_value_gt(pk_cols: list[str], cursor) -> Column:
     return pred
 
 
-def keyset_batch(
-    source: DataFrame,
-    pk,
-    cursor=None,
-    limit: int = 5000,
-    materialize: bool = True,
-) -> tuple[DataFrame, object | None, bool]:
-    """One keyset batch: (rows, next_cursor, done).
+@dataclass
+class KeysetPage:
+    """One lazy keyset page: ``rows`` plus what its execution observed.
+
+    ``rows`` is ``where(pk > cursor).orderBy(pk).limit(n)`` with an
+    ``Observation`` of ``max(struct(pk))`` and ``count`` attached, so
+    the one action that writes the page also yields its next cursor —
+    the reference's single query (pkg/imports/import.go:209-223). The
+    observation records the *first* execution of ``rows`` only; a caller
+    that runs the page twice must compare counts (``Importer.run`` does).
+    """
+
+    rows: DataFrame
+    pks: list[str]
+    limit: int
+    obs: Observation
+
+    def observed(self) -> tuple[object | None, int, bool]:
+        """``(next_cursor, n, done)`` from the execution that ran ``rows``.
+
+        ``next_cursor`` is the max pk in the page (None when it is empty;
+        a tuple for composite keys); ``done`` marks a page smaller than
+        ``limit`` — the scan tail. Raises if no execution of ``rows``
+        reported within ``OBSERVE_TIMEOUT_S``: ``Observation.get`` alone
+        would block forever on a page that never ran.
+        """
+        deadline = time.monotonic() + OBSERVE_TIMEOUT_S
+        # getRowOrEmpty waits up to 100 ms in the JVM per call
+        while self.obs._jo.getRowOrEmpty().isEmpty():
+            if time.monotonic() > deadline:
+                raise RuntimeError(
+                    f"keyset page never ran: no execution of it reported "
+                    f"within {OBSERVE_TIMEOUT_S:g} s"
+                )
+        got = self.obs.get
+        mx, n = got["mx"], got["n"]
+        if mx is None:
+            next_cursor = None
+        elif len(self.pks) == 1:
+            next_cursor = mx[0]
+        else:
+            next_cursor = tuple(mx)
+        return next_cursor, n, n < self.limit
+
+
+def keyset_batch(source: DataFrame, pk, cursor=None, limit: int = 5000) -> KeysetPage:
+    """One keyset page, built lazily: running it is the caller's action.
 
     ``pk`` is a column name or a LIST of names (composite key —
-    lexicographic row-value pagination). ``rows`` is ordered by pk and
-    bounded by ``limit``; ``next_cursor`` is the max pk in the batch
-    (None when the batch is empty; a tuple for composite keys);
-    ``done`` marks a batch smaller than ``limit`` — the scan tail.
-
-    With ``materialize`` (the default) the batch is pinned with an eager
-    ``localCheckpoint`` before anything reads it, so the cursor/count agg
-    and the caller's sink write see the *same* rows. Against a live
-    source, two separate executions of the lazy
-    ``orderBy(pk).limit(n)`` can observe different snapshots — a
-    concurrent insert with pk <= cursor can displace a row out of the
-    second run's LIMIT window, silently skipping it. The reference
-    derives rows and cursor from a single query
-    (pkg/imports/import.go:209-223); materializing restores that
-    contract (and saves the double scan). Pass ``materialize=False``
-    only for plan inspection of the pre-pinned scan.
+    lexicographic row-value pagination). The page's rows are ordered by
+    pk and bounded by ``limit``; ``pk > cursor`` reaches the source scan
+    (JDBC pushdown / parquet min-max skipping) when the page runs.
+    Building it runs no Spark job.
     """
     pks = _pk_list(pk)
     scan = source
     if cursor is not None:
         scan = scan.where(row_value_gt(pks, cursor))
-    batch = scan.orderBy(*pks).limit(limit)
-    if materialize:
-        # pk > cursor still reaches the scan (pushdown happens during
-        # this one materializing execution); the checkpoint truncates
-        # lineage so later readers reuse the stored blocks.
-        batch = batch.localCheckpoint(eager=True)
-    # struct max orders lexicographically — one agg yields the
+    obs = Observation()
+    # struct max orders lexicographically — one observed agg yields the
     # composite cursor without a second ordered scan
-    row = batch.agg(
-        F.max(F.struct(*pks)).alias("mx"), F.count(F.lit(1)).alias("n")
-    ).collect()[0]
-    if row["mx"] is None:
-        next_cursor = None
-    elif len(pks) == 1:
-        next_cursor = row["mx"][0]
-    else:
-        next_cursor = tuple(row["mx"])
-    done = row["n"] < limit
-    return batch, next_cursor, done
+    rows = scan.orderBy(*pks).limit(limit).observe(
+        obs, F.max(F.struct(*pks)).alias("mx"), F.count(F.lit(1)).alias("n")
+    )
+    return KeysetPage(rows, pks, limit, obs)
 
 
 def partitioned_snapshot(

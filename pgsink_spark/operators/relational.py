@@ -100,19 +100,21 @@ def a5b_keyset_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
     extends the import contract with lexicographic row-value cursors
     (imports/keyset.row_value_gt) — the expanded
     ``k1 > c1 OR (k1 = c1 AND k2 > c2)`` predicate pushes to the scan,
-    and the next cursor comes from one struct-max agg (struct ordering
-    IS lexicographic), so each batch costs one bounded read at any
-    scale. This query runs the REAL two-batch driver loop: batch 1
-    yields the cursor, batch 2 is returned and hash-checked against
-    DuckDB's native row-value comparison.
+    and the next cursor is a struct-max observed on the page's own
+    execution (struct ordering IS lexicographic), so each batch costs
+    one bounded read at any scale. This query runs the REAL two-batch
+    driver loop: batch 1 runs once to yield the cursor, batch 2 is
+    returned and hash-checked against DuckDB's native row-value
+    comparison.
     """
     from pgsink_spark.imports.keyset import keyset_batch
 
     orders = load_table(spark, sf_dir, "orders")
     pk = ["o_custkey", "o_orderkey"]
-    _, cursor, _ = keyset_batch(orders, pk, limit=200)
-    batch2, _, _ = keyset_batch(orders, pk, cursor=cursor, limit=200)
-    return batch2.select(
+    page1 = keyset_batch(orders, pk, limit=200)
+    page1.rows.write.format("noop").mode("overwrite").save()
+    cursor, _, _ = page1.observed()
+    return keyset_batch(orders, pk, cursor=cursor, limit=200).rows.select(
         "o_custkey",
         "o_orderkey",
         "o_orderstatus",

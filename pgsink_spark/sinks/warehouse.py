@@ -100,7 +100,6 @@ class WarehouseSink:
         env: DataFrame,
         namespace: str,
         name: str,
-        cluster: bool = True,
         epoch: int | None = None,
         stream_id: str = "default",
     ) -> InsertResult:
@@ -122,13 +121,13 @@ class WarehouseSink:
         requests from BigQuery. Day partitions + parquet min/max stats
         give readers partition pruning for time-bounded queries.
 
-        ``cluster`` additionally range-partitions + sorts each batch by
-        the primary key inside each day — the C3 clustering the
-        reference requests from BigQuery (schema_builders.go:99-106).
-        Sorted files give parquet tight per-row-group pk min/max stats,
-        so pk-point reads skip whole row groups/files (the Z-ORDER
-        analogue for a single key). Costs one range shuffle per batch;
-        compaction reads win it back on every pk lookup.
+        Each batch is also range-partitioned + sorted by the primary key
+        inside each day — the C3 clustering the reference requests from
+        BigQuery (schema_builders.go:99-106). Sorted files give parquet
+        tight per-row-group pk min/max stats, so pk-point reads skip
+        whole row groups/files (the Z-ORDER analogue for a single key).
+        Costs one range shuffle per batch; compaction reads win it back
+        on every pk lookup.
         """
         from pyspark.sql import Observation
 
@@ -158,7 +157,7 @@ class WarehouseSink:
             after_or_before().alias("payload"),
             F.to_date("timestamp").alias("day"),
         )
-        if cluster and keys:
+        if keys:
             pk_cols = [F.col(f"payload.{c}") for c in keys]
             out = out.repartitionByRange(
                 F.col("day"), *pk_cols

@@ -33,10 +33,12 @@ def test_keyset_batch_pagination(spark, sf_dir):
     cursor = None
     last_max = None
     for _ in range(10_000):
-        batch, cursor, done = keyset_batch(orders, "o_orderkey", cursor, 1000)
+        page = keyset_batch(orders, "o_orderkey", cursor, 1000)
+        keys = [r["o_orderkey"] for r in page.rows.collect()]
+        cursor, n, done = page.observed()
         if cursor is None:
             break
-        keys = [r["o_orderkey"] for r in batch.select("o_orderkey").collect()]
+        assert n == len(keys) and cursor == keys[-1]
         assert keys == sorted(keys)
         if last_max is not None:
             assert min(keys) > last_max  # strictly beyond the cursor
@@ -49,8 +51,8 @@ def test_keyset_batch_pagination(spark, sf_dir):
 
 def test_keyset_batch_pushes_filter_down(spark, sf_dir):
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    batch, _, _ = keyset_batch(orders, "o_orderkey", 500, 100, materialize=False)
-    plan = batch._jdf.queryExecution().executedPlan().toString()
+    page = keyset_batch(orders, "o_orderkey", 500, 100)
+    plan = page.rows._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan and "GreaterThan(o_orderkey,500)" in plan
 
 
@@ -181,6 +183,171 @@ def test_importer_with_instrumented_insert(spark, sf_dir, store):
     assert m.rows_total["public.nation"] == nation.count()
     assert m.batches_total["public.nation"] == len(sink.batches)
     assert m.insert_duration["public.nation"].n == len(sink.batches)
+
+
+class _JobGroup:
+    """Counts the Spark jobs started inside a ``with`` block."""
+
+    def __init__(self, spark, name: str):
+        self.sc, self.name = spark.sparkContext, name
+
+    def __enter__(self):
+        self.sc.setJobGroup(self.name, self.name)
+        return self
+
+    def __exit__(self, *exc):
+        self.sc.setLocalProperty("spark.jobGroup.id", None)
+
+    def jobs(self) -> int:
+        return len(self.sc.statusTracker().getJobIdsForGroup(self.name))
+
+
+def test_keyset_page_build_runs_no_spark_job(spark, sf_dir):
+    """Building a page, plan included, runs nothing; its one execution
+    yields its rows and its next cursor together."""
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    pk = ["o_custkey", "o_orderkey"]
+    with _JobGroup(spark, "keyset-page-build") as g:
+        page = keyset_batch(orders, pk, (5, 0), 50)
+        page.rows._jdf.queryExecution().executedPlan()
+        assert g.jobs() == 0
+    keys = [(r["o_custkey"], r["o_orderkey"]) for r in page.rows.collect()]
+    cursor, n, done = page.observed()
+    assert keys and n == len(keys) == 50 and not done
+    assert cursor == keys[-1] and keys[0] > (5, 0)
+
+
+def test_importer_writes_each_page_in_one_spark_job(spark, sf_dir, store, tmp_path):
+    """One Spark job per page through the file sink: the write is the
+    page's only execution (25 rows at 10 per page = 3 pages)."""
+    from pgsink_spark.sinks.file_sink import FileSink
+
+    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    sink = FileSink(str(tmp_path / "sink"))
+    store.enqueue("sub", "public", "nation")
+    imp = Importer(store, lambda env, ns, name: sink.insert(env), batch_limit=10)
+    with _JobGroup(spark, "keyset-import") as g:
+        res = imp.run(store.claim(), nation, "n_nationkey")
+        jobs = g.jobs()
+    assert res.done and res.batches == 3 and res.rows == 25
+    assert jobs == 3
+
+
+def test_importer_errors_when_inserter_runs_page_twice(spark, sf_dir, store):
+    """An inserter whose count covers two runs of the page fails the
+    job, and the cursor does not move."""
+    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    sink = _CaptureSink()
+
+    def twice(env, namespace, name):
+        first = sink.insert(env, namespace, name)
+        return first.fold(sink.insert(env, namespace, name))
+
+    job = store.enqueue("sub", "public", "nation")
+    res = Importer(store, twice, batch_limit=10).run(
+        store.claim(), nation, "n_nationkey"
+    )
+    assert not res.done and res.batches == 0 and res.rows == 0
+    j = store.get(job.id)
+    assert j.cursor is None and j.rows_processed_total == 0
+    assert j.error_count == 1 and "more than once" in j.error
+
+
+def test_importer_fails_fast_when_inserter_never_runs_page(spark, sf_dir, store):
+    """An inserter that returns without running the page fails the job
+    within seconds instead of blocking on the page's observation."""
+    import time
+
+    from pgsink_spark.sinks.generic import InsertResult
+
+    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    job = store.enqueue("sub", "public", "nation")
+    imp = Importer(store, lambda env, ns, name: InsertResult(10, None), batch_limit=10)
+    t0 = time.monotonic()
+    res = imp.run(store.claim(), nation, "n_nationkey")
+    assert time.monotonic() - t0 < 30
+    assert not res.done
+    j = store.get(job.id)
+    assert j.cursor is None and "never ran" in j.error
+
+
+def test_importer_counts_observed_rows_when_inserter_returns_none(spark, sf_dir, store):
+    """An inserter that runs the page but reports no count is credited
+    with the rows the page observed, not the page limit."""
+    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    job = store.enqueue("sub", "public", "nation")
+    imp = Importer(store, lambda env, ns, name: env.collect() and None, batch_limit=10)
+    res = imp.run(store.claim(), nation, "n_nationkey")
+    assert res.done and res.rows == 25
+    assert store.get(job.id).rows_processed_total == 25
+
+
+def test_importer_empty_tail_page_commits_nothing(spark, sf_dir, store):
+    """A table that fills its last page exactly ends on an empty page,
+    which commits no cursor and adds no progress."""
+    nation = spark.read.parquet(f"{sf_dir}/nation.parquet").limit(20).cache()
+    sink = _CaptureSink()
+    job = store.enqueue("sub", "public", "nation")
+    calls = []
+    real = store.update_progress
+    store.update_progress = lambda *a: calls.append(a) or real(*a)
+    res = Importer(store, sink.insert, batch_limit=10).run(
+        store.claim(), nation, "n_nationkey"
+    )
+    assert res.done and res.batches == 2 and res.rows == 20
+    assert [n for _id, _c, n in calls] == [10, 10]
+    assert [n for _ns, _t, n in sink.batches] == [10, 10, 0]
+    j = store.get(job.id)
+    assert j.rows_processed_total == 20 and j.completed_at is not None
+
+
+def test_importer_composite_date_key_resumes_exactly(spark, store):
+    """A composite (int, date) cursor persists after page 1 and the
+    resumed run finishes the table: exact total, no key repeated."""
+    import datetime as dt
+
+    rows = [(k % 3, dt.date(2024, 1, 1) + dt.timedelta(days=k), f"v{k}")
+            for k in range(25)]
+    src = spark.createDataFrame(rows, "k int, d date, v string")
+    pk = ["k", "d"]
+    seen = []
+
+    def insert(env, namespace, name):
+        got = env.select("after.k", "after.d").collect()
+        seen.extend((r["k"], r["d"]) for r in got)
+        return None
+
+    job = store.enqueue("sub", "public", "t")
+    imp = Importer(store, insert, batch_limit=10)
+    r1 = imp.run(store.claim(), src, pk, max_batches=1)
+    assert not r1.done and r1.rows == 10
+    j = store.get(job.id)
+    assert j.error is None and j.cursor.startswith("[")
+    job2 = store.claim()
+    assert job2 is not None and job2.id == job.id
+    r2 = imp.run(job2, src, pk)
+    assert r2.done and r1.rows + r2.rows == 25
+    assert len(seen) == len(set(seen)) == 25
+    assert store.get(job.id).rows_processed_total == 25
+
+
+def test_cursor_text_round_trips_typed_components(spark):
+    """Date, timestamp, decimal and string cursor components survive
+    the text column, scalar and composite."""
+    import datetime as dt
+    from decimal import Decimal
+
+    from pgsink_spark.imports.importer import _cursor_to_text, _parse_cursor
+
+    src = spark.createDataFrame(
+        [], "i bigint, d date, ts timestamp, m decimal(12,2), s string"
+    )
+    cur = (7, dt.date(2024, 1, 2), dt.datetime(2024, 1, 2, 3, 4, 5, 6),
+           Decimal("12.50"), 'a "quoted", text')
+    pk = ["i", "d", "ts", "m", "s"]
+    assert _parse_cursor(_cursor_to_text(cur), src, pk) == cur
+    for c, v in zip(pk, cur):
+        assert _parse_cursor(_cursor_to_text(v), src, c) == v
 
 
 def test_two_drivers_never_double_claim(tmp_path):
@@ -452,13 +619,11 @@ def test_keyset_batch_composite_pagination(spark, sf_dir):
     seen = []
     cursor = None
     for _ in range(10_000):
-        batch, cursor, done = keyset_batch(orders, pk, cursor, 400)
+        page = keyset_batch(orders, pk, cursor, 400)
+        keys = [(r["o_custkey"], r["o_orderkey"]) for r in page.rows.collect()]
+        cursor, _, done = page.observed()
         if cursor is None:
             break
-        keys = [
-            (r["o_custkey"], r["o_orderkey"])
-            for r in batch.select(*pk).collect()
-        ]
         assert keys == sorted(keys)
         if seen:
             assert keys[0] > seen[-1]  # strictly beyond the cursor

@@ -2,8 +2,8 @@
 drain reads each row from the source once, starts one query whatever
 the window size (also when it resumes an existing checkpoint), confirms
 the capture's last commit, reruns exactly-once after a crash at a sink
-commit boundary, and bytea and array columns land exactly as they were
-committed."""
+commit boundary, writes every raw file in pk order, and bytea and array
+columns land exactly as they were committed."""
 
 from __future__ import annotations
 
@@ -264,6 +264,39 @@ def test_crash_at_sink_commit_boundary_reruns_exactly_once(
         assert {r["id"]: r["v"] for r in spark.table(view).collect()} == {
             k: v for k, v in fold.items() if v is not None}
     assert OffsetStore(cap + ".confirmed").confirmed_lsn == lsns[-1]
+
+
+def test_warehouse_raw_files_sorted_by_pk(tmp_path, spark):
+    """Every raw parquet file a drain writes holds its rows in pk order
+    (the C3 clustering pk-point reads rely on), however out of order
+    the commits carried them."""
+    import random
+
+    import pyarrow.parquet as pq
+
+    rel = _rel(16430, "shuffled", ("v", TEXT))
+    ids = list(range(1, 61))
+    random.Random(7).shuffle(ids)
+    frames = []
+    for i in range(3):
+        chunk = ids[20 * i:20 * (i + 1)]
+        msgs = [encode_relation(rel)] if i == 0 else []
+        msgs += [encode_insert(rel.oid, (str(k).encode(), b"x")) for k in chunk]
+        frames += _txn(100 * (i + 1), *msgs)
+    cap = str(tmp_path / "wal.capture")
+    append_capture(cap, frames)
+    root = str(tmp_path / "state")
+    _stream(root, cap, "--max-commits", "2")
+    raw = os.path.join(root, "sink", "warehouse", "public_shuffled_raw")
+    files = [os.path.join(d, f) for d, _dn, fs in os.walk(raw)
+             for f in fs if f.endswith(".parquet")]
+    seen = []
+    for path in files:
+        keys = pq.read_table(path).column("payload").combine_chunks().field("id")
+        keys = keys.to_pylist()
+        assert keys == sorted(keys), path
+        seen += keys
+    assert len(files) >= 2 and sorted(seen) == list(range(1, 61))
 
 
 def test_bytea_roundtrip_through_warehouse(tmp_path, spark):
