@@ -19,6 +19,7 @@ State layout under ``--root``: ``jobs.json`` (import-job queue),
 from __future__ import annotations
 
 import argparse
+import functools
 import json
 import os
 import sys
@@ -175,10 +176,11 @@ def run_imports(
                         if _s is not None:
                             _s.set_attribute("pgsink.rows", res.rows)
                             _s.set_attribute("pgsink.batches", res.batches)
+                    # raises when the job was taken over meanwhile
+                    jobs.update_progress(job.id, cursor=None, rows=res.rows)
                 except Exception as e:  # noqa: BLE001 — job-scoped failure
                     jobs.record_error(job.id, str(e))
                     continue
-                jobs.update_progress(job.id, cursor=None, rows=res.rows)
                 jobs.complete(job.id)
                 done += 1
                 continue
@@ -349,17 +351,13 @@ def cmd_stream(args) -> int:
             _fan_out(df, entries, write)
 
     else:
-        out = os.path.join(args.root, "sink", "modifications")
+        from pgsink_spark.sinks.file_sink import FileSink
+
+        files = FileSink(os.path.join(args.root, "sink"))
+        out = files.modifications_path
 
         def sink(df, _bid):
-            from pgsink_spark.changelog.envelope import operation
-
-            (
-                df.withColumn("operation", operation())
-                .write.mode("append")
-                .partitionBy("namespace", "name")
-                .json(out)
-            )
+            files.insert(df)
 
     max_commits = getattr(args, "max_commits", 0)
     checkpoint = os.path.join(args.root, "checkpoints", "stream")
@@ -374,8 +372,6 @@ def cmd_stream(args) -> int:
     )
     if max_commits:
         reader = reader.option("maxcommitspertrigger", str(max_commits))
-    if getattr(args, "decode_slices", 0):
-        reader = reader.option("maxpartitions", str(args.decode_slices))
     q = (
         reader.load()
         .writeStream.foreachBatch(sink)
@@ -417,12 +413,18 @@ def cmd_run(args) -> int:
     _root_cm = tracer.span("pgsink.run")
     _root_cm.__enter__()
     api = make_api(args.root)
+    connect = None
     if getattr(args, "pg_host", None):
         # live tick: the catalog IS the server's (the import manager's
         # discovery query, run over the walsender channel)
         from pgsink_spark.streaming.live import list_tables
+        from pgsink_spark.streaming.replication import dial
 
-        live_client = _connect_pg(args)
+        connect = functools.partial(
+            dial, args.pg_host, args.pg_port, args.pg_db, args.pg_user,
+            args.pg_password, args.pg_ssl,
+        )
+        live_client = connect()
         catalog_rows = list_tables(live_client)
         live_client.close()
     else:
@@ -445,7 +447,7 @@ def cmd_run(args) -> int:
         _rs.set_attribute("pgsink.removed", len(removed))
     print(f"reconciled added={len(added)} removed={len(removed)}")
 
-    if getattr(args, "pg_host", None):
+    if connect is not None:
         # live tick: drain the real server's WAL into the root capture
         # (publication converged to the locally published table set),
         # then fall through to the normal capture→warehouse stream
@@ -474,9 +476,7 @@ def cmd_run(args) -> int:
     from pgsink_spark.sinks.instrumented import SinkMetrics
 
     metrics = SinkMetrics()
-    live_client = (
-        _connect_pg(args) if getattr(args, "pg_host", None) else None
-    )
+    live_client = connect() if connect is not None else None
     try:
         done = run_imports(
             args.root, args.source, spark, metrics=metrics,
@@ -516,16 +516,6 @@ def cmd_run(args) -> int:
     return 0
 
 
-def _connect_pg(args):
-    """Client from the `run` command's --pg-* argument block."""
-    from pgsink_spark.streaming.replication import dial
-
-    return dial(
-        args.pg_host, args.pg_port, args.pg_db, args.pg_user,
-        args.pg_password, args.pg_ssl,
-    )
-
-
 def cmd_capture(args) -> int:
     """LIVE CDC tick: connect to a real Postgres over the socket
     client (TLS + SCRAM as needed), converge slot + publication, and
@@ -533,34 +523,21 @@ def cmd_capture(args) -> int:
     the reference binary's loop; `stream run` / `run --capture` is the
     downstream half. availableNow semantics: each invocation catches
     up to the server's current WAL position and exits."""
-    from pgsink_spark.streaming.live import (
-        capture_with_retry,
-        ensure_publication,
-        ensure_slot,
-        sync_publication_tables,
-    )
+    from pgsink_spark.streaming.live import capture_with_retry, provision
     from pgsink_spark.streaming.replication import dial
 
-    def connect():
-        return dial(
-            args.host, args.port, args.db, args.user, args.password,
-            args.ssl,
-        )
-
-    client = connect()
-    created_pub = ensure_publication(client, args.publication)
-    if args.tables:
-        desired = {
-            tuple(t.split(".", 1)) for t in args.tables.split(",") if t
-        }
-        added, removed = sync_publication_tables(
-            client, args.publication, desired
-        )
+    connect = functools.partial(
+        dial, args.host, args.port, args.db, args.user, args.password,
+        args.ssl,
+    )
+    created_pub, changes, created = provision(
+        connect, args.slot, args.publication, args.tables
+    )
+    if changes is not None:
+        added, removed = changes
         print(f"publication converged added={len(added)} removed={len(removed)}"
               f" created={created_pub}")
-    created = ensure_slot(client, args.slot)
     print(f"slot {'created' if created else 'exists'}: {args.slot}")
-    client.close()  # the drain loop dials its own connections
     report = capture_with_retry(
         connect, args.slot, args.publication, args.out,
         max_txns=args.max_txns,
@@ -697,13 +674,6 @@ def build_parser() -> argparse.ArgumentParser:
         "REST sink (raw tables + most-recent-row views in a dataset)",
     )
     _add_bq_args(st)
-    st.add_argument(
-        "--decode-slices",
-        type=int,
-        default=0,
-        help="decode each micro-batch in N parallel commit-range "
-        "slices (0 = single slice, strict arrival order)",
-    )
     st.add_argument(
         "--max-commits",
         type=int,

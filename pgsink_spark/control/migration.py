@@ -60,8 +60,8 @@ def _save_jobs(root: str, data: dict) -> None:
 
 
 def _jobs_lock(root: str):
-    """The ImportJobStore's own file lock (f"{jobs_path}.lock" —
-    imports/jobs.py:317). Every jobs.json read-modify-write in a
+    """The ImportJobStore's own file lock (f"{jobs_path}.lock", taken by
+    ``ImportJobStore._locked``). Every jobs.json read-modify-write in a
     migration runs under it so a `migrate` against a LIVE root cannot
     interleave with a running server's store writes and clobber them
     (the schema_migrations lock only serializes migrators against each
@@ -98,7 +98,8 @@ def _create_jobs_store(root: str) -> None:
 # Canonical record shape as of the head of the chain — the reference's
 # 20200510 drop+recreate pair rewrote the table to a cleaner structure;
 # for a record store that is "every record carries exactly the fields
-# the current ImportJob dataclass declares" (imports/jobs.py:256).
+# the current ImportJob dataclass declares" (imports/jobs.py ImportJob),
+# the claim lease included.
 _CANONICAL_DEFAULTS = {
     "cursor": None,
     "completed_at": None,
@@ -107,6 +108,8 @@ _CANONICAL_DEFAULTS = {
     "error_count": 0,
     "last_error_at": None,
     "rows_processed_total": 0,
+    "lease_owner": None,
+    "lease_at": None,
 }
 
 

@@ -10,17 +10,17 @@ Schema and semantics follow the reference's ``pgsink.import_jobs`` table
 - never-errored jobs are claimed first (``ORDER BY error IS NULL DESC``);
 - progress updates bump ``cursor`` and ``rows_processed_total``
   (pkg/imports/importer.go:143-160);
-- acquiring is mutually exclusive ACROSS DRIVERS (the reference uses
-  ``FOR UPDATE SKIP LOCKED``, pkg/imports/worker.go:165-187; here a
-  pluggable per-job lease backend — ``FileLeaseBackend`` for drivers
-  sharing a POSIX filesystem, ``ObjectStoreLeaseBackend`` for cloud
-  deployments where atomic O_EXCL create does not exist but
-  conditional PUT/DELETE (S3 ``If-None-Match``/``If-Match``, GCS
-  generation preconditions) does), and every mutator merges its dirty
-  jobs over the on-disk state UNDER AN EXCLUSIVE ADVISORY LOCK so two
-  drivers progressing different jobs never clobber each other's
-  updates (without the lock the load-merge-write is a lost-update
-  race; with it the per-job overlay is serialized and conflict-free).
+- acquiring is mutually exclusive ACROSS DRIVERS. The reference takes
+  one row lock, ``FOR UPDATE SKIP LOCKED`` (pkg/imports/worker.go:
+  165-187); here the claimed job's record carries a lease
+  (``lease_owner``, ``lease_at``) in the queue file itself. Every
+  operation is one read-modify-write of that file under its exclusive
+  advisory lock, so the lease check and the stamp are one critical
+  section, and two drivers changing different jobs never lose each
+  other's writes. Progress renews the lease; release, complete, error
+  and expire clear it. A lease older than ``lease_ttl_s`` (a crashed
+  or stalled holder) may be taken over, and the old holder's later
+  writes then leave the new holder's record alone.
 
 Persistence is an atomically-replaced JSON file; swap for a Delta table
 with optimistic transactions when the queue outgrows one filesystem.
@@ -53,207 +53,6 @@ def _flocked(lock_path: str):
         os.close(fd)
 
 
-class FileLeaseBackend:
-    """Per-job lease files for drivers sharing a POSIX filesystem.
-
-    O_EXCL creation is the fast-path row lock; the steal (expired
-    lease) and release paths are read-check-modify sequences, so they
-    serialize under one advisory flock — without it, a lease crossing
-    its TTL between a holder's read and remove can be stolen mid-
-    release and the original owner then deletes the thief's lease,
-    admitting a third concurrent claimant (ADVICE r4).
-    """
-
-    def __init__(self, root: str):
-        self.root = root
-
-    def _lease_path(self, job_id: int) -> str:
-        return os.path.join(self.root, f"{job_id}.lease")
-
-    def acquire(self, job_id: int, owner: str, now: float, ttl_s: float) -> bool:
-        os.makedirs(self.root, exist_ok=True)
-        lease = self._lease_path(job_id)
-        payload = json.dumps({"owner": owner, "at": now}).encode()
-        try:
-            fd = os.open(lease, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            pass
-        else:
-            with os.fdopen(fd, "wb") as f:
-                f.write(payload)
-            return True
-        # held: steal only if expired, serialized against other
-        # stealers AND against the holder's release
-        with _flocked(os.path.join(self.root, ".lock")):
-            try:
-                with open(lease) as f:
-                    held = json.load(f)
-            except FileNotFoundError:
-                held = None
-            except (OSError, ValueError):
-                held = {}
-            if held is None:
-                # released while we waited for the lock — take it
-                # fresh via O_EXCL: a concurrent fast-path creator
-                # does NOT hold the flock, so only the atomic create
-                # can arbitrate here
-                try:
-                    fd = os.open(lease, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                except FileExistsError:
-                    return False
-                with os.fdopen(fd, "wb") as f:
-                    f.write(payload)
-                return True
-            if now - held.get("at", now) <= ttl_s:
-                return False  # live lease, someone else's claim
-            # expired: overwrite in place — fast-path creators are
-            # blocked by the file's existence, other stealers and the
-            # holder's release serialize on the flock we hold
-            tmp = f"{lease}.new.{os.getpid()}"
-            with open(tmp, "wb") as f:
-                f.write(payload)
-            os.replace(tmp, lease)
-            return True
-
-    def release(self, job_id: int, owner: str) -> None:
-        lease = self._lease_path(job_id)
-        with _flocked(os.path.join(self.root, ".lock")):
-            try:
-                with open(lease) as f:
-                    held = json.load(f)
-            except (OSError, ValueError):
-                return
-            if held.get("owner") == owner:
-                os.remove(lease)
-
-
-class LocalConditionalStore:
-    """Local-directory emulator of an object store's conditional API
-    (S3 ``If-None-Match: *`` PUT / ``If-Match`` DELETE, GCS
-    ``ifGenerationMatch``). In production the SERVICE serializes these
-    primitives; the emulator stands in with an flock so the lease
-    logic above it exercises exactly the object-store contract —
-    put-if-absent, get-with-etag, replace-if-match, delete-if-match —
-    and nothing filesystem-specific."""
-
-    def __init__(self, root: str):
-        self.root = root
-
-    def _path(self, key: str) -> str:
-        return os.path.join(self.root, key)
-
-    @contextlib.contextmanager
-    def _tx(self):
-        os.makedirs(self.root, exist_ok=True)
-        with _flocked(os.path.join(self.root, ".lock")):
-            yield
-
-    @staticmethod
-    def _new_etag() -> str:
-        return os.urandom(8).hex()
-
-    def put_if_absent(self, key: str, data: bytes) -> str | None:
-        with self._tx():
-            if os.path.exists(self._path(key)):
-                return None
-            etag = self._new_etag()
-            with open(self._path(key), "wb") as f:
-                f.write(etag.encode() + b"\n" + data)
-            return etag
-
-    def get(self, key: str) -> tuple[bytes, str] | None:
-        with self._tx():
-            try:
-                with open(self._path(key), "rb") as f:
-                    raw = f.read()
-            except FileNotFoundError:
-                return None
-            etag, _, data = raw.partition(b"\n")
-            return data, etag.decode()
-
-    def replace_if_match(self, key: str, data: bytes, etag: str) -> str | None:
-        with self._tx():
-            try:
-                with open(self._path(key), "rb") as f:
-                    cur = f.read().partition(b"\n")[0].decode()
-            except FileNotFoundError:
-                return None
-            if cur != etag:
-                return None
-            new = self._new_etag()
-            with open(self._path(key), "wb") as f:
-                f.write(new.encode() + b"\n" + data)
-            return new
-
-    def delete_if_match(self, key: str, etag: str) -> bool:
-        with self._tx():
-            try:
-                with open(self._path(key), "rb") as f:
-                    cur = f.read().partition(b"\n")[0].decode()
-            except FileNotFoundError:
-                return False
-            if cur != etag:
-                return False
-            os.remove(self._path(key))
-            return True
-
-
-class ObjectStoreLeaseBackend:
-    """Leases over conditional-PUT primitives — the cloud-safe claim
-    path where O_EXCL/rename atomicity does not exist.
-
-    Every transition is generation-guarded, so it is race-free WITHOUT
-    any lock on the client side: acquire is put-if-absent; steal is
-    replace-if-match against the etag the expired payload was read
-    under (only one stealer's precondition holds); release is
-    delete-if-match against the etag WE wrote (a lease stolen and
-    re-granted since has a different generation, so a late release
-    fails harmlessly instead of deleting the thief's lease).
-    """
-
-    def __init__(self, store):
-        self.store = store
-        self._etags: dict[int, str] = {}
-
-    @staticmethod
-    def _key(job_id: int) -> str:
-        return f"{job_id}.lease"
-
-    def acquire(self, job_id: int, owner: str, now: float, ttl_s: float) -> bool:
-        payload = json.dumps({"owner": owner, "at": now}).encode()
-        etag = self.store.put_if_absent(self._key(job_id), payload)
-        if etag is not None:
-            self._etags[job_id] = etag
-            return True
-        got = self.store.get(self._key(job_id))
-        if got is None:
-            # released between our PUT and GET; one clean retry
-            etag = self.store.put_if_absent(self._key(job_id), payload)
-            if etag is not None:
-                self._etags[job_id] = etag
-                return True
-            return False
-        data, cur_etag = got
-        try:
-            held = json.loads(data)
-        except ValueError:
-            held = {}
-        if now - held.get("at", now) <= ttl_s:
-            return False
-        new_etag = self.store.replace_if_match(
-            self._key(job_id), payload, cur_etag
-        )
-        if new_etag is None:
-            return False  # lost the steal race
-        self._etags[job_id] = new_etag
-        return True
-
-    def release(self, job_id: int, owner: str) -> None:
-        etag = self._etags.pop(job_id, None)
-        if etag is not None:
-            self.store.delete_if_match(self._key(job_id), etag)
-
-
 @dataclass
 class ImportJob:
     id: int
@@ -269,6 +68,10 @@ class ImportJob:
     rows_processed_total: int = 0
     created_at: float = field(default_factory=time.time)
     updated_at: float = field(default_factory=time.time)
+    # the claim: which driver holds the job, and when it last claimed
+    # or progressed it (both None while unclaimed)
+    lease_owner: str | None = None
+    lease_at: float | None = None
 
 
 class ImportJobStore:
@@ -281,7 +84,6 @@ class ImportJobStore:
         max_backoff_s: float = 3600.0,
         owner: str | None = None,
         lease_ttl_s: float = 300.0,
-        lease_backend=None,
     ):
         self.path = path
         self.retry_interval_s = retry_interval_s
@@ -290,10 +92,9 @@ class ImportJobStore:
         # FOR UPDATE SKIP LOCKED world); tests inject fixed owners
         self.owner = owner or f"{_socket.gethostname()}:{os.getpid()}"
         self.lease_ttl_s = lease_ttl_s
-        self._leases = lease_backend or FileLeaseBackend(f"{path}.leases")
         self._jobs: dict[int, ImportJob] = {}
-        self._claimed: set[int] = set()
-        self._dirty: set[int] = set()
+        # job id -> the lease_at this store last stamped on it
+        self._claimed: dict[int, float] = {}
         self._next_id = 1
         if os.path.exists(path):
             self._load()
@@ -305,33 +106,18 @@ class ImportJobStore:
         self._jobs = {j["id"]: ImportJob(**j) for j in data["jobs"]}
         self._next_id = data["next_id"]
 
-    def _save(self) -> None:
-        """Merge-write UNDER THE QUEUE LOCK: overlay this driver's dirty
-        jobs on the on-disk state, so concurrent drivers committing
-        different jobs never undo each other. The per-job lease makes
-        each job single-writer, but the shared FILE is still a
-        read-modify-write — without the flock, two drivers can both
-        load, then write sequentially, and the first writer's update is
-        silently clobbered by the second's stale snapshot (ADVICE r4
-        lost-update)."""
+    @contextlib.contextmanager
+    def _locked(self):
+        """The queue's one critical section: hold its flock and start
+        from the file as it is now. A mutation made inside is written
+        with ``_write`` before the lock drops, so no other driver's
+        write lands between this one's read and its write."""
         with _flocked(f"{self.path}.lock"):
-            self._merge_write()
+            if os.path.exists(self.path):
+                self._load()
+            yield
 
-    def _merge_write(self) -> None:
-        if os.path.exists(self.path):
-            try:
-                with open(self.path) as f:
-                    disk = json.load(f)
-                merged = {j["id"]: ImportJob(**j) for j in disk["jobs"]}
-                self._next_id = max(self._next_id, disk["next_id"])
-            except (OSError, ValueError):
-                merged = {}
-        else:
-            merged = {}
-        for jid in self._dirty:
-            if jid in self._jobs:
-                merged[jid] = self._jobs[jid]
-        self._jobs = merged
+    def _write(self) -> None:
         fd, tmp = tempfile.mkstemp(dir=os.path.dirname(self.path) or ".")
         with os.fdopen(fd, "w") as f:
             json.dump(
@@ -342,28 +128,24 @@ class ImportJobStore:
                 f,
             )
         os.replace(tmp, self.path)
-        self._dirty.clear()
 
-    # -- cross-process lease (the FOR UPDATE SKIP LOCKED analogue) ------
-    def _acquire_lease(self, job_id: int, now: float) -> bool:
-        return self._leases.acquire(job_id, self.owner, now, self.lease_ttl_s)
-
-    def _release_lease(self, job_id: int) -> None:
-        self._leases.release(job_id, self.owner)
+    def _holds(self, j: ImportJob) -> bool:
+        """Whether this store may write ``j``: the lease is still the
+        one it stamped or, for a job it never claimed, nobody holds
+        one."""
+        if j.id in self._claimed:
+            return (j.lease_owner, j.lease_at) == (self.owner, self._claimed[j.id])
+        return j.lease_owner is None
 
     # -- queue ops (reference manager.go / worker.go) -------------------
     def enqueue(self, subscription_id: str, schema: str, table_name: str) -> ImportJob:
-        """Mint-and-write atomically under the queue lock: without it,
-        two drivers can both read the same ``next_id`` and one enqueue
-        silently vanishes under the other's write."""
-        with _flocked(f"{self.path}.lock"):
-            if os.path.exists(self.path):
-                self._load()  # pick up other drivers' enqueues for next_id
+        """Mint-and-write in one critical section: two drivers never
+        mint the same ``next_id``."""
+        with self._locked():
             job = ImportJob(self._next_id, subscription_id, schema, table_name)
             self._jobs[job.id] = job
-            self._dirty.add(job.id)
             self._next_id += 1
-            self._merge_write()
+            self._write()
         return job
 
     def backoff_s(self, error_count: int) -> float:
@@ -375,77 +157,96 @@ class ImportJobStore:
             return False
         if j.id in self._claimed:
             return False
+        if j.lease_owner is not None and now - j.lease_at <= self.lease_ttl_s:
+            return False  # a live lease: someone else's claim
         if j.error_count == 0:
             return True
         return now > (j.last_error_at or 0) + self.backoff_s(j.error_count)
 
     def claim(self, now: float | None = None) -> ImportJob | None:
-        """Claim one job: never-errored first, then oldest. The claim
-        is arbitrated ACROSS drivers by the per-job lease file, so two
-        stores over one queue path can never hand out the same job —
-        a claimant that loses the lease race simply moves to the next
-        candidate (SKIP LOCKED semantics)."""
+        """Claim one job: never-errored first, then oldest (SKIP LOCKED
+        semantics). One critical section under the queue lock loads
+        the queue, picks the first claimable job whose lease is absent
+        or older than ``lease_ttl_s``, stamps the lease ``(owner,
+        now)`` and writes, so two stores over one queue path never
+        hand out the same job. ``now`` both stamps and checks leases."""
         now = time.time() if now is None else now
-        if os.path.exists(self.path):
-            self._load()  # see other drivers' completions/errors
-        candidates = [j for j in self._jobs.values() if self._claimable(j, now)]
-        candidates.sort(key=lambda j: (j.error is not None, j.id))
-        for job in candidates:
-            if self._acquire_lease(job.id, now):
-                self._claimed.add(job.id)
-                return job
-        return None
-
-    def release(self, job_id: int) -> None:
-        self._claimed.discard(job_id)
-        self._release_lease(job_id)
+        with self._locked():
+            candidates = [j for j in self._jobs.values() if self._claimable(j, now)]
+            if not candidates:
+                return None
+            job = min(candidates, key=lambda j: (j.error is not None, j.id))
+            job.lease_owner, job.lease_at = self.owner, now
+            self._write()
+        self._claimed[job.id] = now
+        return job
 
     def update_progress(self, job_id: int, cursor: str | None, rows: int) -> None:
-        j = self._jobs[job_id]
-        j.cursor = cursor
-        j.rows_processed_total += rows
-        j.updated_at = time.time()
-        self._dirty.add(job_id)
-        self._save()
+        """Commit a page's cursor and rows, renewing the lease. Raises
+        when the lease was taken over (or cleared by ``expire``), so
+        the caller stops paging the job; its ``record_error`` or
+        ``release`` then writes nothing."""
+        with self._locked():
+            j = self._jobs[job_id]
+            if not self._holds(j):
+                raise RuntimeError(
+                    f"import job {job_id}: lease no longer held by {self.owner}"
+                )
+            j.cursor = cursor
+            j.rows_processed_total += rows
+            j.updated_at = time.time()
+            if job_id in self._claimed:
+                j.lease_at = self._claimed[job_id] = j.updated_at
+            self._write()
+
+    def _end_claim(self, job_id: int, change=None) -> None:
+        """Apply ``change`` to the job and clear its lease in one write,
+        unless another driver has taken the job over: then its record
+        is left as that holder has it."""
+        with self._locked():
+            j = self._jobs[job_id]
+            if self._holds(j):
+                if change is not None:
+                    change(j)
+                j.lease_owner = j.lease_at = None
+                self._write()
+        self._claimed.pop(job_id, None)
+
+    def release(self, job_id: int) -> None:
+        self._end_claim(job_id)
 
     def record_error(self, job_id: int, message: str) -> None:
-        j = self._jobs[job_id]
-        j.error = message
-        j.error_count += 1
-        j.last_error_at = time.time()
-        j.updated_at = time.time()
-        self._claimed.discard(job_id)
-        self._dirty.add(job_id)
-        self._save()
-        self._release_lease(job_id)
+        def change(j: ImportJob) -> None:
+            j.error = message
+            j.error_count += 1
+            j.last_error_at = j.updated_at = time.time()
+
+        self._end_claim(job_id, change)
 
     def complete(self, job_id: int) -> None:
-        j = self._jobs[job_id]
-        j.completed_at = time.time()
-        j.updated_at = time.time()
-        self._claimed.discard(job_id)
-        self._dirty.add(job_id)
-        self._save()
-        self._release_lease(job_id)
+        def change(j: ImportJob) -> None:
+            j.completed_at = j.updated_at = time.time()
+
+        self._end_claim(job_id, change)
 
     def expire(self, schema: str, table_name: str) -> int:
-        """Expire open jobs for a table (reference api/subscriptions.go:128-153)."""
+        """Expire open jobs for a table (reference api/subscriptions.go:128-153).
+        Clears their leases: a driver still paging one stops at its
+        next progress commit."""
         n = 0
-        for j in self._jobs.values():
-            if (
-                j.schema == schema
-                and j.table_name == table_name
-                and j.completed_at is None
-                and j.expired_at is None
-            ):
-                j.expired_at = time.time()
-                j.updated_at = time.time()
-                self._claimed.discard(j.id)
-                self._dirty.add(j.id)
-                self._release_lease(j.id)
-                n += 1
-        if n:
-            self._save()
+        with self._locked():
+            for j in self._jobs.values():
+                if (
+                    j.schema == schema
+                    and j.table_name == table_name
+                    and j.completed_at is None
+                    and j.expired_at is None
+                ):
+                    j.expired_at = j.updated_at = time.time()
+                    j.lease_owner = j.lease_at = None
+                    n += 1
+            if n:
+                self._write()
         return n
 
     def get(self, job_id: int) -> ImportJob:

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pgsink_spark.changelog.envelope import after_or_before, operation
 from pgsink_spark.changelog.registry import SchemaEntry
 from pgsink_spark.sinks.generic import InsertResult, SchemaHandler
+from pgsink_spark.sinks.instrumented import observed_write
 
 VIEW_TEMPLATE = """CREATE OR REPLACE TEMPORARY VIEW `{view}` AS
 SELECT payload.*
@@ -129,8 +130,6 @@ class WarehouseSink:
         Costs one range shuffle per batch; compaction reads win it back
         on every pk lookup.
         """
-        from pyspark.sql import Observation
-
         if epoch is not None:
             done = self.committed_epoch(namespace, name, stream_id)
             if done is not None and epoch == done:
@@ -162,31 +161,28 @@ class WarehouseSink:
             out = out.repartitionByRange(
                 F.col("day"), *pk_cols
             ).sortWithinPartitions(F.col("day"), *pk_cols)
+        def write(observed: DataFrame) -> None:
+            if epoch is not None:
+                (
+                    observed.withColumn("stream", F.lit(stream_id))
+                    .withColumn("epoch", F.lit(int(epoch)))
+                    .write.mode("overwrite")
+                    .option("partitionOverwriteMode", "dynamic")
+                    .partitionBy("stream", "epoch", "day")
+                    .parquet(self._raw_path(namespace, name))
+                )
+            else:
+                (
+                    observed.write.mode("append")
+                    .partitionBy("day")
+                    .parquet(self._raw_path(namespace, name))
+                )
+
         # single-pass accounting, attached DOWNSTREAM of the range
         # exchange: repartitionByRange samples its child to pick range
         # boundaries, so an upstream observe would fire twice and
         # double-count the batch
-        obs = Observation()
-        observed = out.observe(
-            obs, F.count(F.lit(1)).alias("n"), F.max("lsn").alias("max_lsn")
-        )
-        if epoch is not None:
-            (
-                observed.withColumn("stream", F.lit(stream_id))
-                .withColumn("epoch", F.lit(int(epoch)))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("stream", "epoch", "day")
-                .parquet(self._raw_path(namespace, name))
-            )
-        else:
-            (
-                observed.write.mode("append")
-                .partitionBy("day")
-                .parquet(self._raw_path(namespace, name))
-            )
-        got = obs.get
-        return InsertResult(got["n"], got["max_lsn"])
+        return observed_write(out, write)
 
     # ------------------------------------------------------------------
     # Snapshot manifests: the one commit record of a warehouse write.

@@ -190,7 +190,7 @@ class _RangePartition(InputPartition):
     # index-derived seek plan: decode from seek_offset instead of byte
     # 0, after replaying the relation frames at rel_offsets to rebuild
     # the relation cache (safe defaults = full scan); stop_offset ends
-    # the scan at the slice's last commit instead of EOF
+    # the scan just past the window's end commit instead of at EOF
     seek_offset: int = 0
     rel_offsets: tuple = ()
     stop_offset: int | None = None
@@ -208,7 +208,6 @@ class PgoutputStreamReader(DataSourceStreamReader):
         # previous window's end, so a deep capture backlog drains as
         # bounded batches instead of one giant catch-up batch
         self.max_commits = int(options.get("maxcommitspertrigger", "0"))
-        self.options_maxpartitions = int(options.get("maxpartitions", "1"))
         # driver-side tail index: each poll scans only appended bytes,
         # each batch read seeks — O(new data) per batch, not O(file)
         self._index = CaptureIndex(self.path)
@@ -242,47 +241,17 @@ class PgoutputStreamReader(DataSourceStreamReader):
             )
         # a re-run batch is planned before any latestOffset call
         self._paced_to = max(self._paced_to, end["lsn"])
-        # WAL total order is DATA — (lsn, sequence) on every row — not
-        # partition order: sinks elect rows by that key at read time,
-        # so a batch may decode in parallel. The commit index lets us
-        # split the LSN range at commit boundaries into `maxpartitions`
-        # contiguous slices, each with its own seek offset + relation
-        # replay list; decode throughput then scales with cores
-        # (~100k rows/s/core) instead of being the single-threaded
-        # stage the reference has. Default 1 keeps strict arrival
-        # order for consumers that want it.
+        # one partition, in arrival order: it seeks to the last commit at
+        # or before `start` and stops past the commit at `end`, so a
+        # window decodes only its own commits, not the capture's tail
         self._index.refresh()
-        n = max(1, int(self.options_maxpartitions))
-        cuts = [
-            lsn
-            for lsn, _off, _nr in self._index.commits
-            if start["lsn"] < lsn <= end["lsn"]
-        ]
-        if n <= 1 or len(cuts) <= 1:
-            seek, rels = self._index.seek_point(start["lsn"])
-            return [
-                _RangePartition(
-                    self.path, start["lsn"], end["lsn"], seek, tuple(rels)
-                )
-            ]
-        n = min(n, len(cuts))
-        # n contiguous commit groups; boundaries on commit LSNs
-        bounds = [start["lsn"]]
-        for i in range(1, n):
-            bounds.append(cuts[len(cuts) * i // n - 1])
-        bounds.append(end["lsn"])
-        parts = []
-        for lo, hi in zip(bounds, bounds[1:]):
-            if lo >= hi:
-                continue
-            seek, rels = self._index.seek_point(lo)
-            parts.append(
-                _RangePartition(
-                    self.path, lo, hi, seek, tuple(rels),
-                    self._index.offset_after(hi),
-                )
+        seek, rels = self._index.seek_point(start["lsn"])
+        return [
+            _RangePartition(
+                self.path, start["lsn"], end["lsn"], seek, tuple(rels),
+                self._index.offset_after(end["lsn"]),
             )
-        return parts
+        ]
 
     def read(self, partition: _RangePartition):
         from pgsink_spark.streaming.marshal import RelationCache, marshal

@@ -13,6 +13,8 @@ START_REPLICATION; cmd/pgsink/cmd/app.go — the main loop):
   connection's simple-query channel — no driver library needed);
 - ``ensure_slot`` creates the permanent logical slot idempotently
   (duplicate → no-op, the reference's slot-exists handling);
+- ``provision`` runs those three on one session: the one way the
+  capture CLI and the live streaming source converge a server;
 - ``capture_to_file`` drains the slot into the repo's capture-file
   format with availableNow semantics: consume until the WAL position
   observed at connect time is reached, appending one commit-atomic
@@ -121,6 +123,24 @@ def sync_publication_tables(
             f"{quote_ident(ns)}.{quote_ident(name)}"
         )
     return added, removed
+
+
+def provision(connect, slot: str, publication: str, tables: str | None = None):
+    """Converge the server for a capture on one ``connect()`` session:
+    create the publication if missing, sync its table set to
+    ``tables`` ("ns.t1,ns.t2"; None or empty leaves it as it is) and
+    create the slot if missing. Returns (publication created, (added,
+    removed) or None when not synced, slot created)."""
+    client = connect()
+    try:
+        created_pub = ensure_publication(client, publication)
+        changes = None
+        if tables:
+            desired = {tuple(t.split(".", 1)) for t in tables.split(",") if t}
+            changes = sync_publication_tables(client, publication, desired)
+        return created_pub, changes, ensure_slot(client, slot)
+    finally:
+        client.close()
 
 
 @dataclass(frozen=True)

@@ -31,10 +31,12 @@ Options (all strings, DataSource API):
   slot, publication      — replication identity (created if missing)
   tables                 — optional "ns.t1,ns.t2" publication sync list
   path                   — spool capture file (required)
-  maxcommitspertrigger / maxpartitions / startlsn — file-half options
+  maxcommitspertrigger / startlsn — file-half options
 """
 
 from __future__ import annotations
+
+import functools
 
 from pyspark.sql.datasource import DataSource
 from pyspark.sql.types import StructType
@@ -54,46 +56,20 @@ class PgoutputLiveStreamReader(PgoutputStreamReader):
         self._opts = dict(options)
         self._provisioned = False
 
-    def _connect(self):
+    def _drain(self) -> None:
+        from pgsink_spark.streaming.live import capture_with_retry, provision
+
         o = self._opts
-        return dial(
-            o["pghost"], int(o.get("pgport", "5432")),
+        connect = functools.partial(
+            dial, o["pghost"], int(o.get("pgport", "5432")),
             o.get("pgdb", "postgres"), o.get("pguser", "postgres"),
             o.get("pgpassword"), o.get("pgssl", "prefer"),
         )
-
-    def _drain(self) -> None:
-        from pgsink_spark.streaming.live import (
-            capture_with_retry,
-            ensure_publication,
-            ensure_slot,
-            sync_publication_tables,
-        )
-
-        slot = self._opts["slot"]
-        publication = self._opts["publication"]
         if not self._provisioned:
-            client = self._connect()
-            try:
-                ensure_publication(client, publication)
-                tables = self._opts.get("tables")
-                if tables:
-                    desired = {
-                        tuple(t.split(".", 1))
-                        for t in tables.split(",")
-                        if t
-                    }
-                    sync_publication_tables(client, publication, desired)
-                ensure_slot(client, slot)
-            finally:
-                client.close()
+            provision(connect, o["slot"], o["publication"], o.get("tables"))
             self._provisioned = True
         capture_with_retry(
-            self._connect,
-            slot,
-            publication,
-            self.path,
-            max_reconnects=3,
+            connect, o["slot"], o["publication"], self.path, max_reconnects=3,
         )
 
     def initialOffset(self) -> dict:

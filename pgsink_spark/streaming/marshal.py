@@ -16,7 +16,6 @@ supported type (§1.3 registry); unsupported OIDs raise
 
 from __future__ import annotations
 
-import json
 from dataclasses import dataclass
 from datetime import date, datetime, timezone
 from decimal import Decimal
@@ -227,31 +226,4 @@ def marshal(cache: RelationCache, sm: SequencedMessage) -> Modification | None:
         sequence=sm.sequence,
         before=before,
         after=after,
-    )
-
-
-def modification_to_json(m: Modification) -> str:
-    """NDJSON serialization (reference changelog/serialize/json.go)."""
-
-    def default(o):
-        if isinstance(o, (datetime, date)):
-            return o.isoformat()
-        if isinstance(o, Decimal):
-            return str(o)
-        if isinstance(o, bytes):
-            return o.hex()
-        raise TypeError(type(o))
-
-    return json.dumps(
-        {
-            "timestamp": m.timestamp,
-            "namespace": m.namespace,
-            "name": m.name,
-            "lsn": m.lsn,
-            "sequence": m.sequence,
-            "before": m.before,
-            "after": m.after,
-        },
-        default=default,
-        separators=(",", ":"),
     )

@@ -281,7 +281,6 @@ def test_cli_stream_capture_to_bigquery(spark, tmp_path, fake):
         root=str(tmp_path),
         capture=cap,
         sink="bigquery",
-        decode_slices=0,
         max_commits=0,
         bq_api_base=base,
         bq_project="proj",

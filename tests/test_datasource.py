@@ -283,39 +283,41 @@ def test_max_commits_per_trigger_bounds_each_batch(tmp_path):
     }
 
 
-def test_parallel_slices_cover_range_exactly(tmp_path):
-    """maxpartitions=3: the batch splits at commit boundaries into
-    disjoint contiguous slices whose union equals the single-partition
-    read; each slice stops at its own last commit (stop_offset)."""
+def test_paced_window_decodes_no_frame_past_its_end(tmp_path, monkeypatch):
+    """A paced window stops decoding at its end commit: the first
+    3-commit window of a 9-commit capture decodes its own 12 frames,
+    not the 24 behind it, and the mid-stream window after it replays
+    its relations, starts at its seek point and stops at its end just
+    the same."""
+    from pgsink_spark.streaming import decoder
+
     path = str(tmp_path / "wal.capture")
     frames = []
     for i in range(9):
         frames += _txn(100 * (i + 1), i + 1, (i + 1, f"v{i}"))
     append_capture(path, frames)
 
-    par = PgoutputStreamReader({"path": path, "maxpartitions": "3"})
-    parts = par.partitions({"lsn": 0}, {"lsn": 900})
-    assert len(parts) == 3
-    assert parts[0].start_lsn == 0 and parts[-1].end_lsn == 900
-    # contiguous + disjoint
-    for a, b in zip(parts, parts[1:]):
-        assert a.end_lsn == b.start_lsn
-    assert all(p.stop_offset is not None for p in parts[:-1])
+    reader = PgoutputStreamReader({"path": path, "maxcommitspertrigger": "3"})
+    windows = []
+    start = reader.initialOffset()
+    for _ in range(2):
+        end = reader.latestOffset()
+        windows.append((start, end, reader.partitions(start, end)))
+        start = end
+    assert [e["lsn"] for _s, e, _p in windows] == [300, 600]
 
-    rows = []
-    for p in parts:
-        rows += _read_rows(par, p)
-    ser = PgoutputStreamReader({"path": path})
-    expected = _read_rows(ser, ser.partitions({"lsn": 0}, {"lsn": 900})[0])
-    assert sorted(r[3] for r in rows) == sorted(r[3] for r in expected)
-    assert {r[6]["id"] for r in rows} == {str(i + 1) for i in range(9)}
-
-    # a mid-stream range also slices cleanly
-    parts2 = par.partitions({"lsn": 300}, {"lsn": 900})
-    got = []
-    for p in parts2:
-        got += _read_rows(par, p)
-    assert sorted(r[3] for r in got) == [400, 500, 600, 700, 800, 900]
+    decoded = []
+    real = decoder.decode_message
+    monkeypatch.setattr(
+        decoder, "decode_message", lambda buf: decoded.append(buf) or real(buf)
+    )
+    for (_s, _e, (part,)), ids in zip(windows, [{"1", "2", "3"}, {"4", "5", "6"}]):
+        decoded.clear()
+        rows = _read_rows(reader, part)
+        assert {r[6]["id"] for r in rows} == ids
+        # the replayed relation frames, then 3 transactions of begin,
+        # relation, insert, commit
+        assert len(decoded) == len(part.rel_offsets) + 12
 
 
 def test_capture_index_property_random_streams(tmp_path):

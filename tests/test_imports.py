@@ -166,6 +166,31 @@ def test_importer_records_error(spark, sf_dir, store):
     assert store.claim(now=j.last_error_at + 1) is None
 
 
+def test_importer_stops_paging_a_job_it_lost(spark, sf_dir, tmp_path):
+    """A driver whose lease is taken over while it writes a page stops
+    there: that page's progress commit fails, no further page is read,
+    and the new holder's record is left as it is."""
+    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    path = str(tmp_path / "jobs.json")
+    a = ImportJobStore(path, owner="a", lease_ttl_s=10.0)
+    b = ImportJobStore(path, owner="b", lease_ttl_s=10.0)
+    a.enqueue("sub", "public", "nation")
+    sink = _CaptureSink()
+
+    def insert(env, namespace, name):
+        res = sink.insert(env, namespace, name)
+        if len(sink.batches) == 1:  # a stalls past its ttl mid-page
+            assert b.claim(now=a.get(1).lease_at + 11).id == 1
+        return res
+
+    res = Importer(a, insert, batch_limit=10).run(a.claim(), nation, "n_nationkey")
+    assert not res.done and res.rows == 0
+    assert len(sink.batches) == 1
+    held = ImportJobStore(path).get(1)
+    assert held.lease_owner == "b" and held.error is None
+    assert held.cursor is None and held.rows_processed_total == 0
+
+
 def test_importer_with_instrumented_insert(spark, sf_dir, store):
     """A13 composition on the import path: importer → instrumented →
     capture sink; per-batch durations and row totals are recorded
@@ -413,6 +438,46 @@ def test_two_drivers_threaded_claims_are_disjoint(tmp_path):
     assert sorted(results["a"] + results["b"]) == list(range(1, 41))
 
 
+def test_threaded_claim_progress_complete_stress(tmp_path):
+    """More drivers than cores claim, progress and complete one queue
+    with a tiny switch interval: claims stay disjoint and no progress
+    or completion is lost to another driver's write."""
+    import sys
+    import threading
+
+    path = str(tmp_path / "jobs.json")
+    seed = ImportJobStore(path, owner="seed")
+    for i in range(40):
+        seed.enqueue("sub", "public", f"t{i}")
+    claims: dict[int, list[int]] = {k: [] for k in range(8)}
+
+    def worker(k: int):
+        store = ImportJobStore(path, owner=f"driver-{k}")
+        while (j := store.claim()) is not None:
+            claims[k].append(j.id)
+            store.update_progress(j.id, "1", 1)
+            store.update_progress(j.id, "2", 1)
+            store.complete(j.id)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(k,)) for k in claims]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    got = [i for ids in claims.values() for i in ids]
+    assert sorted(got) == list(range(1, 41))  # disjoint and complete
+    jobs = ImportJobStore(path).all()
+    assert all(j.completed_at is not None for j in jobs)
+    assert all(j.rows_processed_total == 2 and j.cursor == "2" for j in jobs)
+    assert all(j.lease_owner is None for j in jobs)
+
+
 def test_stale_lease_is_stolen_after_ttl(tmp_path):
     import time
 
@@ -479,32 +544,11 @@ def test_two_os_processes_never_double_claim(tmp_path):
     assert sorted(a + b) == list(range(1, 31))
 
 
-import pytest as _pytest
-
-
-def _backend_factory(kind: str, queue_path: str):
-    """Per-store lease-backend factory over one shared lease root —
-    the two-backends-one-queue shape verdict r4 item 7 asks for."""
-    from pgsink_spark.imports.jobs import (
-        FileLeaseBackend,
-        LocalConditionalStore,
-        ObjectStoreLeaseBackend,
-    )
-
-    if kind == "file":
-        return lambda: FileLeaseBackend(f"{queue_path}.leases")
-    return lambda: ObjectStoreLeaseBackend(
-        LocalConditionalStore(f"{queue_path}.leases")
-    )
-
-
-@_pytest.mark.parametrize("backend_kind", ["file", "objectstore"])
-def test_lease_claim_interleavings_property(tmp_path, backend_kind):
+def test_lease_claim_interleavings_property(tmp_path):
     """Property test: ANY interleaving of claim/complete/error/release
     across two stores over one queue keeps the invariants — a job is
     never claimable by both at once, completed jobs stay completed,
-    and errored jobs only come back after backoff. Parameterized over
-    BOTH lease backends (POSIX file and object-store conditional-PUT)."""
+    and errored jobs only come back after backoff."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
@@ -521,21 +565,17 @@ def test_lease_claim_interleavings_property(tmp_path, backend_kind):
     )
     def run(ops):
         import os
-        import shutil
         import time as _t
 
-        root = str(
-            tmp_path / f"q{backend_kind}{abs(hash(tuple(ops))) % 10**8}"
-        )
+        root = str(tmp_path / f"q{abs(hash(tuple(ops))) % 10**8}")
         os.makedirs(root, exist_ok=True)
         path = os.path.join(root, "jobs.json")
-        mk = _backend_factory(backend_kind, path)
-        seed = ImportJobStore(path, owner="seed", lease_backend=mk())
+        seed = ImportJobStore(path, owner="seed")
         for i in range(4):
             seed.enqueue("sub", "public", f"t{i}")
         stores = {
-            "a": ImportJobStore(path, owner="a", lease_backend=mk()),
-            "b": ImportJobStore(path, owner="b", lease_backend=mk()),
+            "a": ImportJobStore(path, owner="a"),
+            "b": ImportJobStore(path, owner="b"),
         }
         held: dict[str, list[int]] = {"a": [], "b": []}
         now = _t.time() + 10_000  # far past any backoff
@@ -561,52 +601,79 @@ def test_lease_claim_interleavings_property(tmp_path, backend_kind):
         for s in stores.values():
             while (j := s.claim(now=now)) is not None:
                 assert j.id not in done
+        # the queue file and its lock are the whole claim state
+        assert sorted(os.listdir(root)) == ["jobs.json", "jobs.json.lock"]
 
     run()
 
 
-def test_object_store_late_release_cannot_delete_thiefs_lease(tmp_path):
-    """The generation-guarded release: owner A's lease expires, B
-    steals it, then A's LATE release fires — it must NOT delete B's
-    lease (the ADVICE r4 two-concurrent-holders hazard). The etag A
-    recorded no longer matches, so the delete is a no-op and a third
-    claimant C still sees B's live lease."""
-    from pgsink_spark.imports.jobs import (
-        LocalConditionalStore,
-        ObjectStoreLeaseBackend,
-    )
+def test_progress_renews_the_lease(tmp_path):
+    """A driver still committing pages keeps its job: each progress
+    commit renews the lease, so a second driver takes the job over only
+    once ``lease_ttl_s`` has passed since the holder's last progress,
+    not since its claim."""
+    import time
 
-    store = LocalConditionalStore(str(tmp_path / "leases"))
-    a = ObjectStoreLeaseBackend(store)
-    b = ObjectStoreLeaseBackend(store)
-    c = ObjectStoreLeaseBackend(store)
-    assert a.acquire(1, "a", now=1000.0, ttl_s=10.0)
-    # a's lease expires; b steals it
-    assert b.acquire(1, "b", now=1011.0, ttl_s=10.0)
-    # a's late release: stale generation, must not remove b's lease
-    a.release(1, "a")
-    assert not c.acquire(1, "c", now=1012.0, ttl_s=10.0)
-    # b's own release DOES free it
-    b.release(1, "b")
-    assert c.acquire(1, "c", now=1013.0, ttl_s=10.0)
+    path = str(tmp_path / "jobs.json")
+    ttl = 300.0
+    a = ImportJobStore(path, owner="a", lease_ttl_s=ttl)
+    a.enqueue("sub", "public", "t")
+    b = ImportJobStore(path, owner="b", lease_ttl_s=ttl)
+    now = time.time()
+    assert a.claim(now=now - (ttl - 10)).id == 1
+    a.update_progress(1, "10", 10)
+    progressed = time.time()  # the renewed lease is stamped in [now, progressed]
+    assert b.claim(now=now + 20) is None
+    assert b.claim(now=now + ttl - 1) is None
+    assert b.claim(now=progressed + ttl + 1).id == 1
 
 
-def test_file_lease_release_is_owner_checked(tmp_path):
-    """File-backend twin of the late-release test: steal + release
-    serialize on the lease-root flock, so a stale owner's release
-    cannot free the thief's lease."""
-    from pgsink_spark.imports.jobs import FileLeaseBackend
+def test_late_writes_leave_new_holders_lease(tmp_path):
+    """A driver whose lease was taken over must not overwrite the new
+    holder: its late release, complete, record_error and
+    update_progress leave the holder's lease and record as they are,
+    and a third driver cannot claim the job until the holder releases
+    it."""
+    path = str(tmp_path / "jobs.json")
+    owners = ["a1", "a2", "a3", "a4", "b", "c"]
+    s = {o: ImportJobStore(path, owner=o, lease_ttl_s=10.0) for o in owners}
+    s["a1"].enqueue("sub", "public", "t")
+    # each lease passes its ttl before the next driver takes the job over
+    for i, o in enumerate(owners[:5]):
+        assert s[o].claim(now=1000.0 + 11 * i).id == 1
+    s["b"].update_progress(1, "42", 42)
+    held = ImportJobStore(path).get(1)
+    assert held.lease_owner == "b"
 
-    root = str(tmp_path / "leases")
-    a = FileLeaseBackend(root)
-    b = FileLeaseBackend(root)
-    c = FileLeaseBackend(root)
-    assert a.acquire(1, "a", now=1000.0, ttl_s=10.0)
-    assert b.acquire(1, "b", now=1011.0, ttl_s=10.0)  # steal after ttl
-    a.release(1, "a")  # owner mismatch → no-op
-    assert not c.acquire(1, "c", now=1012.0, ttl_s=10.0)
-    b.release(1, "b")
-    assert c.acquire(1, "c", now=1013.0, ttl_s=10.0)
+    s["a1"].release(1)
+    s["a2"].complete(1)
+    s["a3"].record_error(1, "late")
+    with pytest.raises(RuntimeError, match="no longer held"):
+        s["a4"].update_progress(1, "7", 7)
+    assert ImportJobStore(path).get(1) == held
+
+    assert s["c"].claim(now=held.lease_at + 5) is None
+    s["b"].release(1)
+    got = s["c"].claim(now=held.lease_at + 5)
+    assert got is not None and got.id == 1
+    assert got.cursor == "42" and got.rows_processed_total == 42
+
+
+def test_expire_clears_the_lease_and_stops_the_holder(tmp_path):
+    """Expiring a claimed job clears its lease in the same write; the
+    driver paging it fails its next progress commit instead of writing
+    over the expired record."""
+    path = str(tmp_path / "jobs.json")
+    worker = ImportJobStore(path, owner="worker")
+    worker.enqueue("sub", "public", "t")
+    assert worker.claim().id == 1
+    assert ImportJobStore(path, owner="api").expire("public", "t") == 1
+    expired = ImportJobStore(path).get(1)
+    assert expired.lease_owner is None and expired.expired_at is not None
+    with pytest.raises(RuntimeError, match="no longer held"):
+        worker.update_progress(1, "5", 5)
+    worker.record_error(1, "stopped")
+    assert ImportJobStore(path).get(1) == expired
 
 
 def test_keyset_batch_composite_pagination(spark, sf_dir):
