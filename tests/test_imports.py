@@ -544,7 +544,7 @@ def test_two_os_processes_never_double_claim(tmp_path):
     assert sorted(a + b) == list(range(1, 31))
 
 
-def test_lease_claim_interleavings_property(tmp_path):
+def test_queue_lease_claim_interleavings_property(tmp_path):
     """Property test: ANY interleaving of claim/complete/error/release
     across two stores over one queue keeps the invariants — a job is
     never claimable by both at once, completed jobs stay completed,
@@ -605,6 +605,25 @@ def test_lease_claim_interleavings_property(tmp_path):
         assert sorted(os.listdir(root)) == ["jobs.json", "jobs.json.lock"]
 
     run()
+
+
+def test_file_lease_release_is_owner_checked(tmp_path):
+    """The lease lives in the queue file, and steal and release
+    serialize on its lock: after B takes an expired lease over, A's
+    late release is a no-op, so a third claimant C still sees B's live
+    lease until B itself releases it."""
+    path = str(tmp_path / "jobs.json")
+    a, b, c = (
+        ImportJobStore(path, owner=o, lease_ttl_s=10.0) for o in "abc"
+    )
+    a.enqueue("sub", "public", "t")
+    assert a.claim(now=1000.0).id == 1
+    assert b.claim(now=1011.0).id == 1  # steal after ttl
+    a.release(1)  # owner mismatch → no-op
+    assert ImportJobStore(path).get(1).lease_owner == "b"
+    assert c.claim(now=1012.0) is None
+    b.release(1)
+    assert c.claim(now=1013.0).id == 1
 
 
 def test_progress_renews_the_lease(tmp_path):
