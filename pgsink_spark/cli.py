@@ -581,46 +581,25 @@ def cmd_stats(args) -> int:
 
 
 def cmd_compact(args) -> int:
-    """Maintain a materialized most-recent-row table from raw envelope
-    parquet: merge new batches incrementally, optionally GC tombstones.
+    """Fold a raw envelope table into its compacted base: one row per
+    key, tombstones kept, one new immutable version per run (the same
+    merge ``install_view(snapshot=True)`` runs over a warehouse table's
+    manifest). A rerun over unchanged raw files writes nothing.
 
     The operational loop a warehouse runs on cron: stream/import append
-    to `_raw`; this command folds the backlog into the compacted table
-    so readers skip the window."""
-    from pyspark.sql import functions as F
-
+    to `_raw`; this command folds the new files into the base so
+    readers skip the window."""
     from pgsink_spark.session import get_spark
-    from pgsink_spark.sinks.compactor import KeyedCompactedTable
+    from pgsink_spark.sinks.compactor import KeyedCompactedTable, parquet_files
 
     spark = get_spark("pgsink-compact")
-    tbl = KeyedCompactedTable(
-        spark, args.out, args.keys.split(","), n_buckets=args.buckets
+    base = KeyedCompactedTable(spark, args.out, args.keys.split(","))
+    prev = base.pointer()
+    ptr = base.fold(
+        args.raw, parquet_files(args.raw), prev["version"] + 1 if prev else 1
     )
-    if args.raw:
-        env = spark.read.option("mergeSchema", "true").parquet(args.raw)
-        # raw stores (timestamp, lsn, sequence, operation, payload);
-        # rebuild the envelope's before/after from the stored image
-        env = env.select(
-            "timestamp",
-            F.lit("cli").alias("namespace"),
-            F.lit("cli").alias("name"),
-            "lsn",
-            "sequence",
-            # reconstruct before/after so the envelope-derived operation
-            # matches the stored one (UPDATE needs both images present)
-            F.when(
-                F.col("operation").isin("DELETE", "UPDATE"), F.col("payload")
-            ).alias("before"),
-            F.when(F.col("operation") != "DELETE", F.col("payload")).alias(
-                "after"
-            ),
-        )
-        buckets = tbl.apply_batch(env)
-        print(f"merged raw backlog into {len(buckets)} buckets")
-    if args.gc_lsn is not None:
-        rewritten = tbl.gc_tombstones(args.gc_lsn)
-        print(f"GC: rewrote buckets {rewritten}")
-    print(f"live rows: {tbl.read().count()}")
+    print(f"base version {ptr['version']}: {len(ptr['covers'])} raw files")
+    print(f"live rows: {base.live(ptr).count()}")
     return 0
 
 
@@ -743,18 +722,11 @@ def build_parser() -> argparse.ArgumentParser:
     sa.set_defaults(fn=cmd_stats)
 
     c = sub.add_parser(
-        "compact", help="incrementally compact raw envelopes to latest-per-key"
+        "compact", help="fold raw envelopes into a latest-per-key base"
     )
-    c.add_argument("--raw", help="raw envelope parquet path to fold in")
-    c.add_argument("--out", required=True, help="compacted table path")
+    c.add_argument("--raw", required=True, help="raw envelope parquet path to fold in")
+    c.add_argument("--out", required=True, help="compacted base path")
     c.add_argument("--keys", required=True, help="comma-separated pk columns")
-    c.add_argument("--buckets", type=int, default=64)
-    c.add_argument(
-        "--gc-lsn",
-        type=int,
-        default=None,
-        help="drop DELETE tombstones at or below this LSN",
-    )
     c.set_defaults(fn=cmd_compact)
     return p
 

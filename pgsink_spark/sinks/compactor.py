@@ -1,208 +1,203 @@
-"""Incremental keyed compaction: a materialized most-recent-row table
-maintained batch-by-batch (the parquet-native MERGE).
+"""Compacted base: the materialized most-recent-row table behind every
+snapshot view.
 
 Reference parity: the BigQuery sink serves latest-row reads through a
-read-time view (pkg/sinks/bigquery/schema_builders.go:115-161); its
-docs leave materialization to the warehouse.
-``WarehouseSink.install_view`` is that read-time view; this module is
-the *incremental* materialization — each envelope batch only touches
-the key-buckets it contains.
+read-time view (pkg/sinks/bigquery/schema_builders.go:115-161), which
+sorts a table's whole raw history on every query; its docs leave
+materialization to the warehouse. ``WarehouseSink.install_view`` keeps
+that view for as-of and directory-listing reads. Snapshot reads go
+through this base instead: one row per key, folded forward from the raw
+table's snapshot manifests, so a read is a plain scan and a pk probe a
+filtered scan of pk-sorted files.
 
-Layout and algorithm:
+Layout (a sibling of the raw table, never inside it):
 
-- The compacted table is parquet partitioned by ``bucket =
-  pmod(xxhash64(key…), n_buckets)`` — a stable content-hash clustering
-  of the key space (the C3 clustering knob, here made the merge unit).
-- ``apply_batch(env)``: project the batch to compacted rows, find its
-  distinct buckets (≤ n_buckets values — control-plane small), read
-  ONLY those partitions of the existing table (partition pruning),
-  re-run the most-recent-row window over old ∪ new, and rewrite just
-  those partitions via dynamic partition overwrite.
-- DELETEs are kept as tombstone rows (operation = 'DELETE') and
-  filtered at read time: a late-arriving older image of a deleted key
-  must lose to the tombstone, which it can only do if the tombstone is
-  still there to outrank it. Real tables GC tombstones after the
-  out-of-orderness horizon passes.
+- ``v{N}-{token}/`` — one immutable base version: one row per key
+  (tombstones kept as ``operation = 'DELETE'`` rows), written as one
+  pk-sorted file per ``FILE_BYTES`` of input, so a small table is one
+  file and one read task. ``N`` is the raw manifest version it covers;
+  the token keeps two folds of one version apart.
+- ``_LATEST`` — the pointer, replaced by an atomic rename: the version,
+  its directory and files, the raw files it ``covers``, and its Spark
+  schema. Readers read exactly those files with that schema, so no
+  footer-inference job runs and a half-written version is never read.
 
-At 100 TB: per-batch cost is O(batch + affected buckets), not O(table)
-— a hot-key workload touches few buckets; a uniform trickle touches
-many small ones. n_buckets is the tuning knob: one bucket should be an
-executor-memory-sized unit. The same bucketing serves pk point-reads
-(scan one partition) and equals the bucketed-join layout of
-operators/bucketing.py. The window ordering (timestamp, lsn, sequence
-DESC) is byte-identical to the read-time view's, so switching readers
-between the view and the materialized table never changes results.
+Folding (``fold``) picks its tail by manifest diff, not by an LSN
+watermark: import rows carry NULL lsn and each stream has its own
+epochs, so only the file sets say what is new. The tail is the files
+the current manifest names that the base does not cover. When a covered
+file has left the manifest (``expire_raw``, a replay's overwrite) the
+base is rebuilt from the whole manifest instead. The merge is the
+read-time view's window — rank per key by (timestamp, lsn, sequence)
+DESC, keep row 1 — over base ∪ tail, so a late older image still loses
+to a retained tombstone and replayed rows collapse onto their first copy.
+A widened payload (ALTER ADD COLUMN) unions by name: old base rows serve
+NULL for the new field.
+
+Concurrency: versions are immutable; publishing takes a flock, and a
+fold that finds the same or a newer version already published discards
+its own copy and serves that one. GC keeps the newest ``KEEP_VERSIONS``
+versions, so a view installed on an older one keeps reading.
 """
 
 from __future__ import annotations
 
+import json
+import math
 import os
+import re
+import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from pgsink_spark.changelog.envelope import after_or_before, operation
+from pgsink_spark.changelog.envelope import OP_DELETE
+from pgsink_spark.imports.jobs import _flocked
 
-OP_DELETE = "DELETE"
+ROW_COLUMNS = ("timestamp", "lsn", "sequence", "operation", "payload")
+FILE_BYTES = 64 << 20  # input bytes per pk-sorted base file
+KEEP_VERSIONS = 3
+POINTER = "_LATEST"
+_VERSION_DIR = re.compile(r"v(\d+)-[0-9a-f]+")
+
+
+def parquet_files(root: str) -> list[str]:
+    """Data files under ``root``, relative and sorted; directories that
+    Spark hides (``_``/``.`` prefixed, e.g. ``_manifest``) are skipped."""
+    files = []
+    for dirpath, dirnames, fnames in os.walk(root):
+        dirnames[:] = [d for d in dirnames if not d.startswith(("_", "."))]
+        files += [
+            os.path.relpath(os.path.join(dirpath, f), root)
+            for f in fnames
+            if f.endswith(".parquet")
+        ]
+    return sorted(files)
+
+
+def latest_rows(rows: DataFrame, key_columns: list[str], n_files: int) -> DataFrame:
+    """The most-recent row per key, tombstones kept, range-partitioned
+    into ``n_files`` pk-sorted partitions. The window's ordering is
+    compaction_view_sql's; the range exchange also satisfies the
+    window's clustering, so the merge shuffles once."""
+    pk = [F.col(f"payload.{c}") for c in key_columns]
+    rank = F.row_number().over(
+        Window.partitionBy(*pk).orderBy(
+            F.col("timestamp").desc(),
+            F.col("lsn").desc_nulls_last(),
+            F.col("sequence").desc_nulls_last(),
+        )
+    )
+    return (
+        rows.repartitionByRange(n_files, *pk)
+        .withColumn("_rank", rank)
+        .where(F.col("_rank") == 1)
+        .drop("_rank")
+    )
 
 
 class KeyedCompactedTable:
-    """Materialized latest-per-key table under ``path``, merged
-    incrementally from envelope batches (foreachBatch-compatible:
-    ``stream.foreachBatch(lambda df, _: table.apply_batch(df))``)."""
+    """Versioned latest-per-key base under ``path``, folded forward from
+    a raw envelope table's file sets."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        key_columns: list[str],
-        n_buckets: int = 64,
-    ):
+    def __init__(self, spark: SparkSession, path: str, key_columns: list[str]):
         self.spark = spark
         self.path = path
         self.key_columns = list(key_columns)
-        self.n_buckets = n_buckets
-        self.last_affected: list[int] = []  # introspection for tests/metrics
 
-    # -- layout ---------------------------------------------------------
+    def pointer(self) -> dict | None:
+        try:
+            with open(os.path.join(self.path, POINTER)) as f:
+                return json.load(f)
+        except (OSError, ValueError):
+            return None
 
-    def _bucket(self) -> F.Column:
-        keys = [F.col(f"payload.{c}") for c in self.key_columns]
-        return F.pmod(F.xxhash64(*keys), F.lit(self.n_buckets)).cast("int")
+    def read(self, pointer: dict) -> DataFrame:
+        """Every base row of one version, tombstones included."""
+        files = [os.path.join(self.path, pointer["dir"], f) for f in pointer["files"]]
+        schema = T.StructType.fromJson(pointer["schema"])
+        return self.spark.read.schema(schema).parquet(*files)
 
-    def _project(self, env: DataFrame) -> DataFrame:
-        """Envelope batch → compacted-row shape (ordering columns kept
-        so later merges can re-rank against existing rows)."""
-        return env.select(
-            "timestamp",
-            "lsn",
-            "sequence",
-            operation().alias("operation"),
-            after_or_before().alias("payload"),
-        ).withColumn("bucket", self._bucket())
-
-    def _have_buckets(self) -> bool:
-        return os.path.isdir(self.path) and any(
-            e.startswith("bucket=") for e in os.listdir(self.path)
-        )
-
-    # -- merge ----------------------------------------------------------
-
-    def apply_batch(self, env: DataFrame) -> list[int]:
-        """Merge one envelope batch; returns the bucket ids rewritten."""
-        fresh = self._project(env)
-        affected = sorted(
-            r["bucket"] for r in fresh.select("bucket").distinct().collect()
-        )
-        self.last_affected = affected
-        if not affected:
-            return affected
-
-        if self._have_buckets():
-            # mergeSchema + allowMissingColumns: schema evolution (ALTER
-            # TABLE ADD COLUMN) widens the payload struct between
-            # batches; old rows serve NULL for the new field
-            current = self.spark.read.option("mergeSchema", "true").parquet(
-                self.path
-            ).where(F.col("bucket").isin(affected))
-            merged_in = current.unionByName(fresh, allowMissingColumns=True)
-        else:
-            merged_in = fresh
-
-        pk = [F.col(f"payload.{c}") for c in self.key_columns]
-        rank = F.row_number().over(
-            # byte-identical ordering to compaction_view_sql
-            Window.partitionBy(*pk).orderBy(
-                F.col("timestamp").desc(),
-                F.col("lsn").desc_nulls_last(),
-                F.col("sequence").desc_nulls_last(),
-            )
-        )
-        merged = (
-            merged_in.withColumn("row_number", rank)
-            .where(F.col("row_number") == 1)
-            .drop("row_number")
-        )
-        (
-            merged.repartition(len(affected), "bucket")
-            .sortWithinPartitions(*pk)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(self.path)
-        )
-        return affected
-
-    def gc_tombstones(self, up_to_lsn: int) -> list[int]:
-        """Physically drop DELETE tombstones with ``lsn <= up_to_lsn``.
-
-        The horizon is the caller's out-of-orderness bound (e.g. the
-        confirmed-LSN watermark minus the max replay window): once no
-        older image of a key can still arrive, its tombstone is dead
-        weight. Only buckets actually holding qualifying tombstones are
-        rewritten. Returns the rewritten bucket ids.
-        """
-        if not self._have_buckets():
-            return []
-        df = self.spark.read.option("mergeSchema", "true").parquet(self.path)
-        dead = (F.col("operation") == OP_DELETE) & (
-            F.col("lsn") <= F.lit(up_to_lsn)
-        )
-        affected = sorted(
-            r["bucket"]
-            for r in df.where(dead).select("bucket").distinct().collect()
-        )
-        if not affected:
-            return affected
-        pk = [F.col(f"payload.{c}") for c in self.key_columns]
-        kept = df.where(F.col("bucket").isin(affected)).where(~dead)
-        kept = kept.localCheckpoint(eager=True)  # read fully BEFORE overwrite
-        survivors = {
-            r["bucket"] for r in kept.select("bucket").distinct().collect()
-        }
-        if survivors:
-            (
-                kept.repartition(len(survivors), "bucket")
-                .sortWithinPartitions(*pk)
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("bucket")
-                .parquet(self.path)
-            )
-        # dynamic overwrite only rewrites partitions it has rows for; a
-        # bucket whose every row was a dead tombstone must be dropped
-        # explicitly
-        import shutil  # noqa: PLC0415
-
-        for b in set(affected) - survivors:
-            shutil.rmtree(
-                os.path.join(self.path, f"bucket={b}"), ignore_errors=True
-            )
-        return affected
-
-    # -- read -----------------------------------------------------------
-
-    def read(self) -> DataFrame:
-        """Live rows (tombstones filtered), payload columns only."""
+    def live(self, pointer: dict) -> DataFrame:
+        """Payload columns of the live rows: no window, no shuffle."""
         return (
-            self.spark.read.option("mergeSchema", "true")
-            .parquet(self.path)
+            self.read(pointer)
             .where(F.col("operation") != OP_DELETE)
             .select("payload.*")
         )
 
-    def read_key(self, **key_values) -> DataFrame:
-        """Point lookup: prunes to the key's single bucket partition."""
-        df = self.spark.read.option("mergeSchema", "true").parquet(self.path)
-        # xxhash64 is type-sensitive: literals must be cast to the
-        # payload field's exact type or the bucket hash won't match
-        payload_t = df.schema["payload"].dataType
-        keys = [
-            F.lit(key_values[c]).cast(payload_t[c].dataType)
-            for c in self.key_columns
+    def fold(self, raw_root: str, files: list[str], version: int) -> dict:
+        """Bring the base up to the raw files ``files`` (relative to
+        ``raw_root``) at ``version``; returns the pointer to read. A base
+        that already covers exactly ``files`` runs no Spark job."""
+        ptr = self.pointer()
+        current = set(files)
+        covered = set(ptr["covers"]) if ptr else set()
+        if ptr is not None and covered == current:
+            return ptr
+        if not current:
+            raise FileNotFoundError(f"no raw files to fold under {raw_root}")
+        # merge the tail into the base, unless a covered file has left
+        # the manifest: then rebuild from all of it
+        merge = ptr is not None and covered <= current
+        paths = [
+            os.path.join(raw_root, p)
+            for p in sorted(current - covered if merge else current)
         ]
-        bucket = F.pmod(F.xxhash64(*keys), F.lit(self.n_buckets)).cast("int")
-        df = df.where(F.col("bucket") == bucket)
-        for c in self.key_columns:
-            df = df.where(F.col(f"payload.{c}") == key_values[c])
-        return df.where(F.col("operation") != OP_DELETE).select("payload.*")
+        size = sum(os.path.getsize(p) for p in paths)
+        rows = (
+            self.spark.read.option("mergeSchema", "true")
+            .option("basePath", raw_root)
+            .parquet(*paths)
+            .select(*ROW_COLUMNS)
+        )
+        if merge:
+            rows = self.read(ptr).unionByName(rows, allowMissingColumns=True)
+            size += sum(
+                os.path.getsize(os.path.join(self.path, ptr["dir"], f))
+                for f in ptr["files"]
+            )
+        merged = latest_rows(
+            rows, self.key_columns, max(1, math.ceil(size / FILE_BYTES))
+        )
+        name = f"v{version}-{uuid.uuid4().hex[:12]}"
+        out = os.path.join(self.path, name)
+        merged.write.parquet(out)
+        return self._publish(
+            {
+                "version": version,
+                "dir": name,
+                "files": sorted(f for f in os.listdir(out) if f.endswith(".parquet")),
+                "covers": sorted(current),
+                "schema": merged.schema.jsonValue(),
+            }
+        )
+
+    def _publish(self, new: dict) -> dict:
+        with _flocked(os.path.join(self.path, f"{POINTER}.lock")):
+            cur = self.pointer()
+            if cur is not None and cur["version"] >= new["version"]:
+                # a racing fold published this version or a newer one
+                shutil.rmtree(os.path.join(self.path, new["dir"]))
+                return cur
+            path = os.path.join(self.path, POINTER)
+            with open(path + ".tmp", "w") as f:
+                json.dump(new, f)
+            os.replace(path + ".tmp", path)
+            self._gc()
+        return new
+
+    def _gc(self) -> None:
+        """Drop version directories older than the newest
+        ``KEEP_VERSIONS`` versions (crash leftovers included)."""
+        dirs = {}
+        for d in os.listdir(self.path):
+            m = _VERSION_DIR.fullmatch(d)
+            if m:
+                dirs[d] = int(m.group(1))
+        floor = sorted(set(dirs.values()))[-KEEP_VERSIONS:][0]
+        for d, v in dirs.items():
+            if v < floor:
+                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)

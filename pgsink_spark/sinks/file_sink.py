@@ -48,15 +48,22 @@ class FileSink:
 
     # -- modification batches (data plane, distributed) -----------------
     def insert(self, env: DataFrame) -> InsertResult:
+        # format first, observe after: with the observe on top, a
+        # current_timestamp() page folds date_format(literal) to a
+        # string literal, so every page of one shape reuses the same
+        # generated classes instead of inlining a new timestamp long
+        out = (
+            env.withColumn("operation", operation())
+            .withColumn("ts_out", F.date_format("timestamp", "yyyy-MM-dd'T'HH:mm:ss.SSSXXX"))
+            .drop("timestamp")
+            .withColumnRenamed("ts_out", "timestamp")
+        )
+
         def writer(df: DataFrame) -> None:
             (
-                df.withColumn("operation", operation())
-                .withColumn("ts_out", F.date_format("timestamp", "yyyy-MM-dd'T'HH:mm:ss.SSSXXX"))
-                .drop("timestamp")
-                .withColumnRenamed("ts_out", "timestamp")
-                .write.mode("append")
+                df.write.mode("append")
                 .partitionBy("namespace", "name")
                 .json(self.modifications_path)
             )
 
-        return observed_write(env, writer)
+        return observed_write(out, writer)

@@ -2,7 +2,7 @@
 GROUP-BY-SUM/COUNT table current from envelope batches, without
 recomputing from the base table.
 
-The compactor (sinks/compactor.py) maintains latest-per-key ROWS; this
+The compacted base (sinks/compactor.py) holds latest-per-key ROWS; this
 maintains downstream AGGREGATES — the other half of a serving layer.
 For self-maintainable aggregates (SUM, COUNT; AVG = SUM/COUNT at read
 time) a change stream updates the aggregate with pure deltas:
@@ -15,7 +15,7 @@ deltas (one shuffle over batch-only data), then merge into the
 materialized table keyed on the group and drop groups whose count
 reaches zero. The merge reads ONLY the groups present in the batch
 (broadcast semi-join pruning, or bucket partitioning for huge group
-spaces — same layout knob as the compactor).
+spaces).
 
 At 100 TB: per-batch cost is O(batch + touched groups); the aggregate
 table itself is group-cardinality-sized, usually tiny next to the base

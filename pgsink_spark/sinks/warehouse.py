@@ -9,16 +9,20 @@ pk order by timestamp desc)``, keep row 1, drop DELETEs
 (schema_builders.go:115-161; golden fixture
 pkg/sinks/bigquery/schema_builders_test.go:110-129).
 
-Spark-first shape: the raw table is parquet (or Delta where available)
-partitioned by ``to_date(timestamp)`` — partition pruning gives the
-time-travel reads; the view is plain Spark SQL installed with
-``CREATE OR REPLACE TEMP VIEW``. At 100 TB the view cost is bounded by
-the partitions a query touches, and an optional incremental MERGE
-compactor can materialize it without changing readers.
+Spark-first shape: the raw table is parquet partitioned by
+``to_date(timestamp)`` (under ``stream=/epoch=`` with exactly-once
+epochs), and each batch commits by publishing a snapshot manifest.
+Views are temp views over one of two sources:
 
-``compaction_view_sql`` is covered by a byte-exact golden test
-(tests/testdata/view.example.sql), the same discipline as the
-reference's golden-file test.
+- snapshot views (``install_view(snapshot=True)``) read the table's
+  compacted base (sinks/compactor.py): one row per key, stored beside
+  the raw table in ``<ns>_<name>_base/`` and folded forward to the
+  latest manifest at install time. The view is a filter over it — no
+  window, no shuffle — so reads stop sorting the whole raw history.
+- as-of views and directory-listing views keep the read-time window
+  ``compaction_view_sql`` over raw files, which is covered by a
+  byte-exact golden test (tests/testdata/view.example.sql), the same
+  discipline as the reference's golden-file test.
 """
 
 from __future__ import annotations
@@ -31,6 +35,7 @@ from pyspark.sql import functions as F
 
 from pgsink_spark.changelog.envelope import after_or_before, operation
 from pgsink_spark.changelog.registry import SchemaEntry
+from pgsink_spark.sinks.compactor import KeyedCompactedTable, parquet_files
 from pgsink_spark.sinks.generic import InsertResult, SchemaHandler
 from pgsink_spark.sinks.instrumented import observed_write
 
@@ -234,17 +239,9 @@ class WarehouseSink:
         ``epoch`` the same rename records it as ``stream_id``'s
         committed epoch; without one (a republish) every stream's epoch
         carries forward."""
-        root = self._raw_path(namespace, name)
         mdir = self._manifest_dir(namespace, name)
         os.makedirs(mdir, exist_ok=True)
-        files = []
-        for dirpath, dirnames, fnames in os.walk(root):
-            dirnames[:] = [d for d in dirnames if d != "_manifest"]
-            for f in fnames:
-                if f.endswith(".parquet"):
-                    files.append(
-                        os.path.relpath(os.path.join(dirpath, f), root)
-                    )
+        files = parquet_files(self._raw_path(namespace, name))
         latest = self._latest(namespace, name)
         version = latest["version"] + 1
         streams = latest["streams"]
@@ -253,7 +250,7 @@ class WarehouseSink:
         vpath = os.path.join(mdir, f"v{version}.json")
         tmp = vpath + ".tmp"
         with open(tmp, "w") as f:
-            json.dump({"version": version, "files": sorted(files)}, f)
+            json.dump({"version": version, "files": files}, f)
         os.replace(tmp, vpath)
         path = os.path.join(mdir, "LATEST")
         tmp = path + ".tmp"
@@ -277,11 +274,11 @@ class WarehouseSink:
         batch."""
         return self._latest(namespace, name)["streams"].get(stream_id)
 
-    def read_snapshot(
+    def _manifest_files(
         self, namespace: str, name: str, version: int | None = None
-    ) -> DataFrame:
-        """Snapshot-isolated raw read: exactly one manifest's files."""
-        root = self._raw_path(namespace, name)
+    ) -> list[str]:
+        """Raw files (relative) named by one manifest version, the
+        latest by default."""
         v = version or self.manifest_version(namespace, name)
         if v == 0:
             raise FileNotFoundError(
@@ -290,8 +287,17 @@ class WarehouseSink:
         with open(
             os.path.join(self._manifest_dir(namespace, name), f"v{v}.json")
         ) as f:
-            files = json.load(f)["files"]
-        paths = [os.path.join(root, p) for p in files]
+            return json.load(f)["files"]
+
+    def read_snapshot(
+        self, namespace: str, name: str, version: int | None = None
+    ) -> DataFrame:
+        """Snapshot-isolated raw read: exactly one manifest's files."""
+        root = self._raw_path(namespace, name)
+        paths = [
+            os.path.join(root, p)
+            for p in self._manifest_files(namespace, name, version)
+        ]
         return (
             self.spark.read.option("mergeSchema", "true")
             .option("basePath", root)
@@ -410,16 +416,40 @@ class WarehouseSink:
         asof_lsn: int | None = None,
         snapshot: bool = False,
     ) -> str:
-        """Register raw scan + compaction view; return the view name.
+        """Install the table's most-recent-row view; return its name.
+
+        ``snapshot=True`` serves the latest committed manifest from the
+        table's compacted base (sinks/compactor.py, stored beside the
+        raw table in ``<ns>_<name>_base/``): install first folds the
+        manifest's new files into a new base version, then installs
+        ``SELECT payload.* FROM base WHERE operation != 'DELETE'`` — no
+        window, no shuffle, and a pk probe filters a pk-sorted scan.
+        Concurrent in-flight batches stay invisible, and installing
+        again at an unchanged manifest runs no Spark job.
 
         ``asof_lsn`` installs the time-travel variant (suffixed
-        ``_asof``) serving the table's state as of that confirmed LSN.
-        ``snapshot=True`` backs the view with the latest committed
-        manifest instead of a directory listing, so concurrent
-        in-flight batches are invisible to readers.
+        ``_asof``) serving the table's state as of that confirmed LSN,
+        over the manifest's files with ``snapshot=True`` or a directory
+        listing without; it and the plain listing view keep the
+        read-time window of ``compaction_view_sql``.
         """
-        raw_view = self._raw_name(namespace, name)
         keys = self._keys[(namespace, name)]
+        view = f"{namespace}_{name}"
+        if snapshot and asof_lsn is None:
+            version = self.manifest_version(namespace, name)
+            base = KeyedCompactedTable(
+                self.spark,
+                os.path.join(self.root, f"{namespace}_{name}_base"),
+                keys,
+            )
+            ptr = base.fold(
+                self._raw_path(namespace, name),
+                self._manifest_files(namespace, name, version),
+                version,
+            )
+            base.live(ptr).createOrReplaceTempView(view)
+            return view
+        raw_view = self._raw_name(namespace, name)
         if snapshot:
             self.read_snapshot(namespace, name).createOrReplaceTempView(
                 raw_view
@@ -433,7 +463,6 @@ class WarehouseSink:
                 .parquet(self._raw_path(namespace, name))
                 .createOrReplaceTempView(raw_view)
             )
-        view = f"{namespace}_{name}"
         if asof_lsn is not None:
             view = f"{view}_asof"
         self.spark.sql(compaction_view_sql(view, raw_view, keys, asof_lsn))

@@ -32,8 +32,7 @@ key. Seen-store size is bounded by accepted docs, not crawl volume;
 the stores are append-only so a crashed batch replays idempotently at
 read time (canonical election keeps the min doc_id per fp — re-running
 a batch re-appends rows that dedup away on read, and a periodic
-compaction with KeyedCompactedTable-style bucketing removes them
-physically).
+compaction removes them physically).
 """
 
 from __future__ import annotations

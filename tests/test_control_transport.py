@@ -190,8 +190,9 @@ def test_cli_stream_run(tmp_path, spark, capsys):
 
 
 def test_cli_compact_roundtrip(spark, tmp_path, capsys):
-    """CLI compact: fold a raw envelope table into a compacted table,
-    then GC its tombstone."""
+    """CLI compact: fold a raw envelope table into its compacted base
+    (tombstone kept, filtered from the live rows); a rerun over the same
+    raw files writes no new version."""
     import datetime
 
     from pyspark.sql import types as T
@@ -220,19 +221,22 @@ def test_cli_compact_roundtrip(spark, tmp_path, capsys):
     spark.createDataFrame(rows, raw_schema).write.parquet(raw)
 
     out = str(tmp_path / "compacted")
-    rc = main(
-        ["compact", "--raw", raw, "--out", out, "--keys", "id",
-         "--buckets", "4", "--gc-lsn", "13"]
-    )
-    assert rc == 0
+    argv = ["compact", "--raw", raw, "--out", out, "--keys", "id"]
+    assert main(argv) == 0
     got = capsys.readouterr().out
-    assert "live rows: 1" in got
+    assert "base version 1" in got and "live rows: 1" in got
 
-    live = spark.read.parquet(out)
+    from pgsink_spark.sinks.compactor import KeyedCompactedTable
+
+    base = KeyedCompactedTable(spark, out, ["id"])
+    ptr = base.pointer()
     assert [
         (r["payload"]["id"], r["payload"]["v"], r["operation"])
-        for r in live.collect()
-    ] == [(1, "b", "UPDATE")]
+        for r in base.read(ptr).collect()
+    ] == [(1, "b", "UPDATE"), (2, "c", "DELETE")]
+    assert main(argv) == 0
+    assert "base version 1" in capsys.readouterr().out
+    assert base.pointer() == ptr
 
 
 def test_cli_stream_run_warehouse_sink(tmp_path, spark, capsys):

@@ -165,34 +165,35 @@ def test_e2e_crash_replay_is_idempotent_at_read_time(spark, tmp_path):
 
 def test_e2e_cdc_stream_to_incremental_compactor(spark, tmp_path):
     """Slice 3: the same wire stream served by the MATERIALIZED
-    compaction path (sinks/compactor.py) instead of the read-time view
-    — same final rows, and at-least-once replay of the whole batch is
-    absorbed by the merge (idempotent apply)."""
-    from pgsink_spark.sinks.compactor import KeyedCompactedTable
-
+    compaction path (the compacted snapshot base, sinks/compactor.py)
+    instead of the read-time view — same final rows, and at-least-once
+    replay of the whole batch is absorbed by the merge (idempotent
+    fold)."""
     sub = Subscription(OffsetStore(str(tmp_path / "offsets.json")))
-    tbl = KeyedCompactedTable(
-        spark, str(tmp_path / "kv_compacted"), ["id"], n_buckets=8
-    )
+    sink = WarehouseSink(spark, str(tmp_path / "wh"))
+    sink.handle_schema(SchemaEntry("public", "kv", PAYLOAD, ["id"]))
 
     mods = list(sub.stream(_wire()))
     for m in mods:
         object.__setattr__(m, "timestamp", m.timestamp.replace(tzinfo=None))
     # shuffled write order, same as the view-based slice
     env = modifications_df(spark, list(reversed(mods)), PAYLOAD)
-    tbl.apply_batch(env)
-
-    got = {(r["id"], r["v"]) for r in tbl.read().collect()}
+    sink.insert(env, "public", "kv")
+    sink.commit_manifest("public", "kv")
+    view = sink.install_view("public", "kv", snapshot=True)
+    got = {(r["id"], r["v"]) for r in spark.table(view).collect()}
     assert got == {(1, "a2"), (3, "c")}
 
-    # crash-before-confirm replay: applying the identical batch again
-    # changes nothing (rank keeps one copy per key)
-    tbl.apply_batch(env)
-    got = {(r["id"], r["v"]) for r in tbl.read().collect()}
+    # crash-before-confirm replay: the identical batch appended again
+    # folds as a tail of duplicates and changes nothing
+    sink.insert(env, "public", "kv")
+    sink.commit_manifest("public", "kv")
+    view = sink.install_view("public", "kv", snapshot=True)
+    got = {(r["id"], r["v"]) for r in spark.table(view).collect()}
     assert got == {(1, "a2"), (3, "c")}
-    # and the deleted key's tombstone survives the replay
-    raw = spark.read.parquet(tbl.path)
-    assert raw.where(F.col("operation") == "DELETE").count() == 1
+    # and the deleted key's tombstone survives the replay in the base
+    base = spark.read.parquet(str(tmp_path / "wh" / "public_kv_base" / "v2-*"))
+    assert base.where(F.col("operation") == "DELETE").count() == 1
 
 
 def test_e2e_cdc_stream_to_incremental_agg(spark, tmp_path):

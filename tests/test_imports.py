@@ -258,6 +258,29 @@ def test_importer_writes_each_page_in_one_spark_job(spark, sf_dir, store, tmp_pa
     assert jobs == 3
 
 
+def test_file_sink_page_of_one_shape_compiles_no_class(spark, sf_dir, tmp_path):
+    """A second keyset page of the same shape (same cursor, a later
+    ``current_timestamp()``) reuses the first one's generated classes,
+    counted with Spark's CodegenMetrics. The file sink formats the
+    timestamp before observing the page; observed first, the timestamp
+    stays a literal that codegen inlines as a new long on every page."""
+    from pgsink_spark.imports.importer import to_envelope
+    from pgsink_spark.sinks.file_sink import FileSink
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = compiles.METRIC_COMPILATION_TIME()
+    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    sink = FileSink(str(tmp_path / "sink"))
+    counts = []
+    for _ in range(3):
+        page = keyset_batch(nation, "n_nationkey", 4, 5)
+        env = to_envelope(page.rows, "public", "nation",
+                          timestamp=F.current_timestamp())
+        assert sink.insert(env).count == 5
+        counts.append(compiles.getCount())
+    assert counts[1] == counts[2], counts
+
+
 def test_importer_errors_when_inserter_runs_page_twice(spark, sf_dir, store):
     """An inserter whose count covers two runs of the page fails the
     job, and the cursor does not move."""
@@ -416,7 +439,7 @@ def test_two_drivers_never_double_claim(tmp_path):
 
 def test_two_drivers_threaded_claims_are_disjoint(tmp_path):
     """Thread-level race: two claimers hammer one queue concurrently;
-    the lease's O_EXCL arbitration keeps the claim sets disjoint."""
+    the ``jobs.json`` flock keeps the claim sets disjoint."""
     import threading
 
     path = str(tmp_path / "jobs.json")
@@ -497,8 +520,8 @@ def test_stale_lease_is_stolen_after_ttl(tmp_path):
 
 def test_two_os_processes_never_double_claim(tmp_path):
     """The real multi-driver shape: two SEPARATE OS processes hammer
-    one queue path concurrently; the lease files arbitrate. Claims
-    must be disjoint and complete."""
+    one queue path concurrently; the ``jobs.json`` flock arbitrates.
+    Claims must be disjoint and complete."""
     import subprocess
     import sys
     import textwrap

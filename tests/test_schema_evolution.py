@@ -17,7 +17,6 @@ from pyspark.sql import types as T
 
 from pgsink_spark.changelog import SchemaEntry, spark_type_for
 from pgsink_spark.sinks import WarehouseSink
-from pgsink_spark.sinks.compactor import KeyedCompactedTable
 from pgsink_spark.streaming import OffsetStore, Relation, RelationColumn
 from pgsink_spark.streaming.decoder import (
     encode_begin,
@@ -131,13 +130,21 @@ def test_schema_evolution_through_compactor(spark, tmp_path):
     for m in mods:
         object.__setattr__(m, "timestamp", m.timestamp.replace(tzinfo=None))
 
-    tbl = KeyedCompactedTable(
-        spark, str(tmp_path / "acct_compacted"), ["id"], n_buckets=4
-    )
-    tbl.apply_batch(modifications_df(spark, mods[:1], _entry(REL_V1).payload))
-    tbl.apply_batch(modifications_df(spark, mods[1:], _entry(REL_V2).payload))
+    # the compacted snapshot base: folded once before the ALTER, then
+    # the widened batch merges as its tail
+    sink = WarehouseSink(spark, str(tmp_path / "wh"))
+    sink.handle_schema(_entry(REL_V1))
+    sink.insert(modifications_df(spark, mods[:1], _entry(REL_V1).payload),
+                "public", "acct")
+    sink.commit_manifest("public", "acct")
+    sink.install_view("public", "acct", snapshot=True)
+    sink.handle_schema(_entry(REL_V2))
+    sink.insert(modifications_df(spark, mods[1:], _entry(REL_V2).payload),
+                "public", "acct")
+    sink.commit_manifest("public", "acct")
+    view = sink.install_view("public", "acct", snapshot=True)
 
-    got = {r["id"]: (r["v"], r["w"]) for r in tbl.read().collect()}
+    got = {r["id"]: (r["v"], r["w"]) for r in spark.table(view).collect()}
     assert got == {1: ("a2", 7), 2: ("b", 42)}
 
 

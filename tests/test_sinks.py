@@ -248,14 +248,13 @@ def test_import_cdc_handoff_cdc_wins_timestamp_tie(spark, tmp_path):
     for the same key with the SAME timestamp must resolve to the CDC
     image — the view orders lsn DESC NULLS LAST, so the import
     snapshot can never shadow a change it raced with. Both serving
-    paths (view + incremental compactor) agree."""
+    paths (read-time view + compacted snapshot base) agree."""
     import datetime
 
     from pyspark.sql import types as T
 
     from pgsink_spark.changelog import SchemaEntry, envelope_schema
     from pgsink_spark.sinks import WarehouseSink
-    from pgsink_spark.sinks.compactor import KeyedCompactedTable
 
     payload = T.StructType(
         [T.StructField("id", T.LongType()), T.StructField("v", T.StringType())]
@@ -278,9 +277,11 @@ def test_import_cdc_handoff_cdc_wins_timestamp_tie(spark, tmp_path):
         (1, "cdc")
     ]
 
-    tbl = KeyedCompactedTable(spark, str(tmp_path / "c"), ["id"], n_buckets=2)
-    tbl.apply_batch(env)
-    assert [(r["id"], r["v"]) for r in tbl.read().collect()] == [(1, "cdc")]
+    sink.commit_manifest("public", "t")
+    view = sink.install_view("public", "t", snapshot=True)
+    assert [(r["id"], r["v"]) for r in spark.table(view).collect()] == [
+        (1, "cdc")
+    ]
 
 
 def test_asof_view_time_travel(spark, tmp_path):
